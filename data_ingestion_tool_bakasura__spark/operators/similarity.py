@@ -77,6 +77,13 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
+def double_array_lit(values) -> Column:
+    """One ``array<double>`` literal built in a single JVM call (a
+    numpy array crosses py4j whole; ``F.array`` of per-element ``lit``
+    makes one call per element)."""
+    return F.lit(np.asarray(values, dtype=np.float64).ravel())
+
+
 def cosine_topk(
     corpus: DataFrame,
     query_vec: list[float],
@@ -84,16 +91,20 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_id: int | None = None,
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exact top-k by cosine similarity to one query vector.
 
     The query vector is a literal array -> evaluated JVM-side per row;
     orderBy+limit compiles to TakeOrderedAndProject (no global sort).
-    Deterministic tie-break on id.
+    Deterministic tie-break on id. ``keep`` names corpus columns carried
+    into the result, so a caller that needs them does not re-scan the
+    corpus to join them back.
     """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    q = double_array_lit(query_vec)
     scored = corpus.select(
         _c(id_col).alias(id_col),
+        *keep,
         F.round(cosine_similarity(_c(vec_col), q), 6).alias("cos_sim"),
     )
     if exclude_id is not None:
@@ -540,7 +551,7 @@ def kmeans_centroids(
 
 def ivf_topk(
     assigned: DataFrame,
-    centroids: DataFrame,
+    centroids: DataFrame | list,
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 2,
@@ -568,14 +579,17 @@ def ivf_topk(
     scan; passing the SAME list here keeps scan pruning and probing
     bit-identical — without it, near-tie centroid similarities can
     round differently between the driver's dgemv and the UDF's dgemm
-    and the UDF may probe a list the scan pruned away (r9 ADVICE)."""
-    rows = sorted(
-        centroids.select(_c(centroid_id).alias("c"), _c(vec_col).alias("v")).collect(),
-        key=lambda r: r["c"],
-    )
+    and the UDF may probe a list the scan pruned away (r9 ADVICE).
+
+    ``centroids`` is the centroid relation, or its rows already
+    collected as (centroid id, vector) pairs — the serving path
+    collects them once to compute ``probe_lists`` and passes them on."""
+    if isinstance(centroids, DataFrame):
+        centroids = centroids.select(_c(centroid_id), _c(vec_col)).collect()
+    rows = sorted(centroids, key=lambda r: r[0])
     if not rows:
         raise ValueError("ivf_topk: centroid set is empty")
-    cids = [r["c"] for r in rows]
+    cids = [r[0] for r in rows]
     if probe_lists is not None:
         unknown = set(probe_lists) - set(cids)
         if unknown:
@@ -584,7 +598,7 @@ def ivf_topk(
             F.array(*[F.lit(c) for c in probe_lists]).cast("array<long>")
         )
     else:
-        C = np.array([r["v"] for r in rows], dtype=np.float64)
+        C = np.array([r[1] for r in rows], dtype=np.float64)
         Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
         np_eff = min(nprobe, len(cids))
 
@@ -805,53 +819,89 @@ def pq_adc_rerank_topk(
     rerank — the 32x-compression sibling of
     :func:`quantized_rerank_topk`.
 
-    Stage 1 (ADC, asymmetric distance computation): each query builds a
-    per-subspace lookup table LUT[j][c] = q_sub_j . centroid_{j,c}
-    (query NOT quantized — the asymmetry that halves PQ error), and a
-    vector's approximate cosine is m table adds instead of dim
-    multiplies over the one-scan corpus of 1-byte codes. Stage 2
-    reranks the per-query ``shortlist`` in exact float cosine with the
-    identical rounding + tiebreak as :func:`cosine_topk_batch`, so with
-    shortlist >> k the output EQUALS the exact scan (contract-tested;
-    q_pq_rerank reuses the exact scan's oracle).
-
-    Scale shape: one corpus scan regardless of query count; the stage-1
-    exchange carries (corpus_id, q_idx, score) scalars only; stage 2
-    re-reads vectors ONLY for shortlist ids via a broadcast semi-join.
-    This inline composition encodes on the fly (so the scan still reads
-    floats once); the serving path persists :func:`pq_encode` output and
-    scans 1-byte codes only — that is where the 32x shows up.
+    The inline composition: trains codebooks when none are given,
+    encodes the corpus on the fly (:func:`pq_encode`, so the scan still
+    reads floats once) and scores the codes with
+    :func:`pq_adc_topk_indexed` — the same stage 1 and stage 2 the
+    serving path runs over codes persisted at build time, where the 32x
+    shows up. With shortlist >> k the output EQUALS the exact scan
+    (contract-tested; q_pq_rerank reuses the exact scan's oracle).
     """
     if codebooks is None:
         codebooks = pq_train(
             corpus, m=m, n_codes=n_codes, iters=iters,
             id_col=corpus_id, vec_col=vec_col,
         )
+    codes = pq_encode(
+        corpus.select(_c(corpus_id).alias(corpus_id), _c(vec_col).alias(vec_col)),
+        codebooks, vec_col,
+    ).select(corpus_id, "pq_code")
+    return pq_adc_topk_indexed(
+        codes, corpus, queries, codebooks, k=k, shortlist=shortlist,
+        corpus_id=corpus_id, query_id=query_id, vec_col=vec_col,
+    )
+
+
+def pq_adc_topk_indexed(
+    codes: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    codebooks: DataFrame,
+    k: int = 10,
+    shortlist: int = 50,
+    corpus_id: str = "vec_id",
+    query_id: str = "q_id",
+    vec_col: str = "embedding",
+    code_col: str = "pq_code",
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """PQ top-k over STORED codes (``codes``: the (id, code) output of
+    :func:`pq_encode`): ADC shortlist + exact float rerank.
+
+    Stage 1 (ADC, asymmetric distance computation): each query builds a
+    per-subspace lookup table LUT[j][c] = q_sub_j . centroid_{j,c}
+    (query NOT quantized — the asymmetry that halves PQ error), and a
+    vector's approximate cosine is m table adds instead of dim
+    multiplies. The tables of all queries are ONE ``array<double>``
+    literal, and the score is one codegen expression per code row (an
+    ``aggregate`` over ``element_at`` into it) — no Python worker, no
+    join against the query side. The per-query ``shortlist`` is a
+    window top-n (ties on the corpus id). Stage 2 reranks it in exact
+    float cosine with the identical rounding + tiebreak as
+    :func:`cosine_topk_batch`, touching ``corpus`` vectors ONLY for the
+    shortlist ids (broadcast join); the query vectors are a literal
+    too. ``keep`` names corpus columns carried into the result.
+
+    Queries are collected driver-side (the LUT is numpy), bounded by
+    :data:`MAX_DRIVER_QUERIES`.
+    """
     C = _pq_codebook_np(codebooks)
     mm, nn, sub = C.shape
     Cf = np.where(np.isfinite(C), C, 0.0)
-    q_rows = _collect_query_rows(queries, query_id, vec_col, "pq_adc_rerank_topk")
-    qids = [r["_q"] for r in q_rows]
+    q_rows = _collect_query_rows(queries, query_id, vec_col, "pq_adc_topk_indexed")
+    nq = len(q_rows)
     Q = np.array([r["_v"] for r in q_rows], dtype=np.float64)
     Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    # LUT[q, j, c] = q_sub_j . centroid_{j,c}
-    LUT = np.einsum("qjs,jcs->qjc", Qn.reshape(len(Q), mm, sub), Cf)
+    # LUT[q, j, c] = q_sub_j . centroid_{j,c}; flattened q-major, so
+    # query q, subspace j, code c sits at 1 + q*mm*nn + j*nn + c
+    lut = double_array_lit(np.einsum("qjs,jcs->qjc", Qn.reshape(nq, mm, sub), Cf))
+    code = _c(code_col)
 
-    encoded = pq_encode(corpus, codebooks, vec_col).select(
-        _c(corpus_id).alias(corpus_id), F.col("pq_code")
-    )
+    def _adc(q):
+        return F.aggregate(
+            F.sequence(F.lit(0), F.lit(mm - 1)),
+            F.lit(0.0),
+            lambda acc, j: acc + F.element_at(
+                lut,
+                q * (mm * nn) + j * nn + F.element_at(code, j + 1).cast("int") + 1,
+            ),
+        )
 
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _adc(codes: pd.Series) -> pd.Series:
-        Cd = np.array(codes.tolist(), dtype=np.int64)  # n x m
-        if not len(Cd):
-            return pd.Series([], dtype=object)
-        # gather: scores[q, i] = sum_j LUT[q, j, Cd[i, j]]
-        scores = LUT[:, np.arange(mm)[None, :], Cd].sum(axis=2)  # nq x n
-        return pd.Series([list(col) for col in scores.T])
-
-    scored = encoded.select(
-        corpus_id, F.posexplode(_adc(F.col("pq_code"))).alias("_qi", "_adc")
+    scored = codes.select(
+        _c(corpus_id).alias(corpus_id),
+        F.posexplode(
+            F.transform(F.sequence(F.lit(0), F.lit(nq - 1)), _adc)
+        ).alias("_qi", "_adc"),
     )
     w1 = Window.partitionBy("_qi").orderBy(F.desc("_adc"), _c(corpus_id))
     short = (
@@ -859,18 +909,17 @@ def pq_adc_rerank_topk(
         .filter(F.col("_r1") <= shortlist)
         .select(corpus_id, "_qi")
     )
-    qdf = F.broadcast(
-        corpus.sparkSession.createDataFrame(
-            [(int(i), q, [float(x) for x in Q[i]]) for i, q in enumerate(qids)]
-        ).toDF("_qi", query_id, "_qvec")
-    )
+    q_type = queries.select(_c(query_id)).schema.fields[0].dataType
+    qids = F.array(*[F.lit(r["_q"]) for r in q_rows]).cast(T.ArrayType(q_type))
+    dim = Q.shape[1]
+    qvec = F.slice(double_array_lit(Q), F.col("_qi") * dim + 1, dim)
     rer = (
         corpus.join(F.broadcast(short), on=corpus_id)
-        .join(qdf, on="_qi")
         .select(
-            query_id,
-            corpus_id,
-            F.round(cosine_similarity(_c(vec_col), F.col("_qvec")), 6).alias("cos_sim"),
+            F.element_at(qids, F.col("_qi") + 1).alias(query_id),
+            _c(corpus_id).alias(corpus_id),
+            *keep,
+            F.round(cosine_similarity(_c(vec_col), qvec), 6).alias("cos_sim"),
         )
     )
     w2 = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), _c(corpus_id))
@@ -1294,6 +1343,7 @@ def binary_topk_indexed(
     query_id: str = "q_id",
     vec_col: str = "embedding",
     code_col: str = "b_code",
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """:func:`binary_rerank_topk` served from a PERSISTED code table
     (``codes``: the (id, packed words) output of
@@ -1302,7 +1352,7 @@ def binary_topk_indexed(
     for the ``shortlist`` rerank rows per query (a semi-join-shaped
     second stage). Equals the fused form for the same shortlist
     (parity-tested in test_index_client). Queries quantize in-plan and
-    broadcast."""
+    broadcast. ``keep`` names corpus columns carried into the result."""
     qz = binary_quantize(
         queries.select(
             _c(query_id).alias("_bq_qid"), _c(vec_col).alias("_bq_qvec")
@@ -1324,11 +1374,14 @@ def binary_topk_indexed(
         .select(query_id, corpus_id, "_bq_qvec")
     )
     rer = short.join(
-        corpus.select(_c(corpus_id).alias(corpus_id), _c(vec_col).alias(vec_col)),
+        corpus.select(
+            _c(corpus_id).alias(corpus_id), _c(vec_col).alias(vec_col), *keep
+        ),
         corpus_id,
     ).select(
         query_id,
         corpus_id,
+        *keep,
         F.round(
             cosine_similarity(_c(vec_col), F.col("_bq_qvec")), 6
         ).alias("cos_sim"),

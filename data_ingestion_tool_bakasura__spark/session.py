@@ -41,6 +41,18 @@ DEFAULT_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.ui.enabled": "false",
+    # one round of IndexClient searches (seven modes) uses more generated
+    # classes than the default 100 entries hold; at 100, every warm
+    # search recompiles what the previous mode evicted
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # the cache keys on generated source; with the stage id in the class
+    # name, the same stage numbered differently by adaptive execution
+    # (stage completion order varies run to run) misses and recompiles
+    "spark.sql.codegen.useIdInClassName": "false",
+    # reliable checkpoints (reliable_checkpoint under a checkpoint dir,
+    # e.g. one per foreachBatch micro-batch) are deleted once the frame
+    # that owns them is garbage-collected, instead of accumulating
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
 
 

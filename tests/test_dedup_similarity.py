@@ -476,6 +476,47 @@ def test_pq_rerank_equals_exact_and_codes_are_bytes(spark):
     assert again == sorted(map(tuple, books.collect()))
 
 
+def test_pq_adc_shortlist_matches_numpy_reference(spark):
+    """The ADC stage of pq_adc_topk_indexed (one codegen expression
+    over a flat LUT literal holding every query's table) against a
+    numpy gather over the same codes: with shortlist == k the result is
+    exactly each query's ADC shortlist, so its ids must be numpy's top
+    ADC ids per query. The Spark sum runs left to right and numpy's
+    pairwise, so ids may differ only where reference scores tie at the
+    cut within 1e-12."""
+    import numpy as np
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    corpus = emb.filter(F.col("vec_id") >= 3)
+    books = SIM.pq_train(corpus, m=4, n_codes=8)
+    codes = SIM.pq_encode(corpus, books).select("vec_id", "pq_code")
+    sl = 7
+    got = {}
+    for r in SIM.pq_adc_topk_indexed(
+        codes, corpus, queries, books, k=sl, shortlist=sl
+    ).collect():
+        got.setdefault(r["q_id"], set()).add(r["vec_id"])
+
+    C = SIM._pq_codebook_np(books)
+    m, _n, sub = C.shape
+    Cf = np.where(np.isfinite(C), C, 0.0)
+    rows = codes.collect()
+    ids = np.array([r["vec_id"] for r in rows])
+    Cd = np.array([r["pq_code"] for r in rows], dtype=np.int64)
+    for q in queries.collect():
+        v = np.asarray(q["embedding"], dtype=np.float64)
+        lut = np.einsum("js,jcs->jc", (v / np.linalg.norm(v)).reshape(m, sub), Cf)
+        score = lut[np.arange(m)[None, :], Cd].sum(axis=1)
+        order = sorted(range(len(ids)), key=lambda i: (-score[i], ids[i]))
+        want = {ids[i] for i in order[:sl]}
+        cut = score[order[sl - 1]]
+        tied = {ids[i] for i in order if abs(score[i] - cut) <= 1e-12}
+        assert got[q["q_id"]] - tied == want - tied
+
+
 def test_ivfadc_full_probe_equals_exact_partial_prunes(spark):
     """IVFADC contract: full probe + generous shortlist reproduces the
     exact scan byte-for-byte (the q_ivfadc_search oracle); partial

@@ -352,7 +352,7 @@ def test_increment_ann_closure(spark, tmp_path):
     store wave 2, increment_ann — new ids become searchable in hnsw and
     ivf modes WITHOUT a rebuild (hnsw rewrites only touched shard
     partitions; ivf appends assignments against the existing
-    centroids; pq needs only a manifest refresh), manifests track the
+    centroids; pq and binary append the wave's codes), manifests track the
     grown row count (no stale-artifact signal left), a second
     increment is a no-op, and exact==ivf-full-probe parity holds on
     the grown corpus."""
@@ -395,6 +395,11 @@ def test_increment_ann_closure(spark, tmp_path):
     hit_b = client.search_vector(probe["content"], k=1, index="binary",
                                  shortlist=n2).first()
     assert hit_b["id"] == probe["id"] and hit_b["cos_sim"] == 1.0
+    # pq serves from stored codes: a corpus-wide shortlist finds the
+    # new chunk only if the increment appended its code
+    hit_p = client.search_vector(probe["content"], k=1, index="pq",
+                                 shortlist=n2).first()
+    assert hit_p["id"] == probe["id"] and hit_p["cos_sim"] == 1.0
 
     # ivf at full probe still equals the exact scan on the grown corpus
     key = lambda df: [(r["id"], r["cos_sim"]) for r in df.collect()]
@@ -760,3 +765,124 @@ def test_initialize_heal_scoped_to_spark_staging_artifacts(spark, tmp_path):
     healed.initialize()
     assert healed.stats()["document_count"] == 0
     assert healed.store(_rows(spark, 0, 3)) > 0
+
+
+def test_store_failed_append_releases_cache(spark, tmp_path, monkeypatch):
+    """store() caches its anti-join result for the count and the
+    append; when the append raises, the cached frame must still be
+    released, not left in the session's cache manager."""
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    client = IndexClient(spark, str(tmp_path / "idx_fail"), embedding_dim=8)
+    client.initialize()
+    rows = _rows(spark, 0, 5)
+    spark.catalog.clearCache()
+
+    def boom(self, *a, **kw):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    with pytest.raises(OSError, match="disk full"):
+        client.store(rows)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_ann_manifest_without_schemas_points_to_rebuild(spark, tmp_path):
+    """Serving reads each artifact with the schema build_ann recorded
+    in its manifest; an artifact whose manifest has none (built before
+    schemas were recorded — for pq, also before codes were stored)
+    raises with a rebuild pointer instead of inferring it."""
+    import pytest
+
+    client = IndexClient(spark, str(tmp_path / "idx_old"), embedding_dim=8)
+    client.initialize()
+    client.store(_rows(spark, 0, 10))
+    man = client.build_ann("pq", pq_m=4, n_codes=8, iters=2)
+    assert set(man["schemas"]) == {"codebooks", "codes"}
+    del man["schemas"]
+    client._write_manifest(client._ann_dir("pq"), man)
+    with pytest.raises(RuntimeError, match=r"build_ann\('pq'\)"):
+        client.search_vector("anything", k=2, index="pq")
+
+
+def test_warm_search_plan_and_codegen(spark, tmp_path):
+    """A warm search pays only for its own work. For text, exact, ivf,
+    pq and binary the executed plan holds no Python evaluation node
+    and no driver-side RDD scan (the query vector is a JVM literal, pq
+    scores stored codes in codegen), and scans the index table once —
+    text three times: BM25 reads corpus statistics and postings in two
+    scans, and the top-k's content in a third. A second round of all
+    seven modes, on another query, compiles no class: the codegen
+    cache holds a whole serving round."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "idx_plan")
+    client = IndexClient(spark, path, embedding_dim=8)
+    client.initialize()
+    client.store(_rows(spark, 0, 40))
+    for kind, kw in (("hnsw", dict(n_shards=4)),
+                     ("ivf", dict(n_lists=4, iters=2)),
+                     ("pq", dict(pq_m=4, n_codes=8, iters=2)),
+                     ("binary", {})):
+        client.build_ann(kind, **kw)
+    probes = [r["content"] for r in client.table().orderBy("id").limit(2).collect()]
+
+    def searches(q):
+        # three distinct terms: BM25's term filter is planned per term
+        # count, so both rounds keep one plan shape
+        words = " ".join(list(dict.fromkeys(q.lower().split()))[:3])
+        return {
+            "text": client.search_text(words, k=5),
+            "exact": client.search_vector(q, k=5),
+            "hnsw": client.search_vector(q, k=5, index="hnsw"),
+            "ivf": client.search_vector(q, k=5, index="ivf"),
+            "pq": client.search_vector(q, k=5, index="pq"),
+            "binary": client.search_vector(q, k=5, index="binary"),
+            "hybrid": client.search_hybrid(q, k=5, index="hnsw"),
+        }
+
+    table_scan = re.compile(r"FileScan parquet .*\[file:" + re.escape(path) + r"\]")
+    # scan nodes print their location cut to this many characters
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    try:
+        first = {mode: (df, df.collect()) for mode, df in searches(probes[0]).items()}
+    finally:
+        spark.conf.unset("spark.sql.maxMetadataStringLength")
+    for mode, (df, rows) in first.items():
+        assert rows, mode
+        if mode in ("hnsw", "hybrid"):
+            continue  # hnsw searches its graph shards in Python by design
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]  # the adaptive final plan
+        assert not re.search(r"EvalPython|InPandas|InArrow", plan), (mode, plan)
+        assert "ExistingRDD" not in plan, (mode, plan)
+        scans = len(table_scan.findall(plan))
+        assert scans == (3 if mode == "text" else 1), (mode, scans, plan)
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    before = compiles.getCount()
+    for mode, df in searches(probes[1]).items():
+        assert df.collect(), mode
+    assert compiles.getCount() == before
+    # the served pq hits are the inline pq_adc_rerank_topk's: the
+    # stored codes are the codes pq_encode gives at query time
+    from data_ingestion_tool_bakasura__spark.functions import embed as E
+    from data_ingestion_tool_bakasura__spark.operators.similarity import (
+        pq_adc_rerank_topk,
+    )
+
+    man = client.ann_manifest("pq")
+    for q in probes:
+        served = [(r["id"], r["cos_sim"])
+                  for r in client.search_vector(q, k=5, index="pq", shortlist=8).collect()]
+        inline = [(r["id"], r["cos_sim"]) for r in pq_adc_rerank_topk(
+            client._embeddable(client.table()),
+            client._query_df(E.hash_embed_py(q, 8)), k=5, shortlist=8,
+            corpus_id="id", vec_col="content_vector",
+            codebooks=client._read_artifact("pq", man, "codebooks"),
+        ).orderBy(F.desc("cos_sim"), "id").collect()]
+        assert served == inline

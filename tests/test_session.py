@@ -99,3 +99,37 @@ def test_reliable_mode_end_to_end(spark, tmp_path):
             spark._jvm.scala.Option.apply(None)
         )
     assert sc.getCheckpointDir() is None
+
+
+def test_released_reliable_checkpoint_is_deleted(spark, tmp_path):
+    """The session sets spark.cleaner.referenceTracking.cleanCheckpoints:
+    once a reliably checkpointed frame is released and garbage-collected,
+    its checkpoint directory is deleted — a foreachBatch sink that
+    checkpoints every micro-batch does not accumulate one per batch."""
+    import gc
+    import time
+
+    assert spark.sparkContext.getConf().get(
+        "spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+    ck = str(tmp_path / "ck")
+    sc = spark.sparkContext
+    sc.setCheckpointDir(ck)
+    try:
+        out = reliable_checkpoint(spark.range(50))
+        assert out.count() == 50
+
+        def rdd_dirs():
+            return [d for _r, ds, _f in os.walk(ck) for d in ds if d.startswith("rdd-")]
+
+        assert rdd_dirs(), "reliable checkpoint wrote no rdd directory"
+        del out
+        deadline = time.monotonic() + 60
+        while rdd_dirs() and time.monotonic() < deadline:
+            gc.collect()
+            spark._jvm.System.gc()
+            time.sleep(0.5)
+        assert not rdd_dirs(), "released checkpoint was not cleaned"
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            spark._jvm.scala.Option.apply(None)
+        )

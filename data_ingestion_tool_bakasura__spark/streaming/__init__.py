@@ -5,7 +5,9 @@ stateful dedup as readStream transformations, plus a bounded-replay
 harness (availableNow trigger -> memory sink) that lets the same
 computation be checked against its batch/DuckDB oracle.
 
-`pipeline` — incremental document ingest: file stream -> chunk ->
-dedup -> embed -> foreachBatch upsert, the streaming form of
-``operators.ingest``.
+`pipeline` — eight foreachBatch sinks over file streams, one skeleton
+(replay guard -> compute -> ordered durable writes -> crash points):
+incremental document ingest, key-addressed upsert, LSH near-dup,
+semantic (SemDeDup) and substring-span dedup, image and video near-dup,
+and the gated WARC/WET crawl corpus.
 """

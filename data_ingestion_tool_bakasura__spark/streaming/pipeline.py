@@ -1,32 +1,65 @@
-"""Incremental document ingest: the streaming form of ``operators.ingest``.
+"""Streaming sinks: the foreachBatch closures behind incremental ingest,
+dedup and crawl.
 
 Reference parity: the reference re-ingests by a human re-uploading
 files through Streamlit (``main.py:226-263``); its dedup probe
 (``db_utils.py:133-146``) is a non-atomic per-chunk HTTP check. Here the
 arrival of new files IS the stream: a file source feeds the same lazy
-chunk->hash->embed transforms, and `foreachBatch` gives the transactional
-per-micro-batch boundary where dedup-against-the-index and the bulk
-append happen atomically per batch.
+transforms as the batch operators, and `foreachBatch` gives the
+transactional per-micro-batch boundary where dedup-against-the-index
+and the bulk append happen atomically per batch.
 
-Scale notes:
-- the chunk/hash/embed stages are stateless -> no streaming state at
-  all; only the sink-side anti-join touches the index, and it reads the
-  index's `text_hash` column only (column-pruned scan, broadcast-able).
-- per micro-batch the work is identical to the batch pipeline, so the
-  100 TB design notes in ``operators.ingest`` carry over; backlog
-  catch-up is governed by maxFilesPerTrigger / availableNow.
-- exactly-once: file source + checkpoint gives exactly-once *input*
-  processing; the parquet append in foreachBatch is idempotent w.r.t.
-  replays only because the anti-join drops already-indexed hashes —
-  the same dedup that the reference does racily, done atomically.
+The eight sinks:
+
+- ``start_incremental_ingest`` — chunk -> hash -> embed -> append;
+- ``start_streaming_upsert`` — key-addressed last-writer-wins merge;
+- ``start_streaming_near_dedup`` — MinHash LSH near-dup corpus;
+- ``start_streaming_semantic_dedup`` — SemDeDup decisions;
+- ``start_streaming_span_dedup`` — substring-span surgery;
+- ``start_streaming_image_dedup`` / ``start_streaming_video_dedup`` —
+  perceptual-hash media corpora;
+- ``start_streaming_crawl`` — WARC/WET pages -> gated page corpus.
+
+The skeleton contract, per micro-batch, that every sink keeps:
+
+1. **Replay guard.** The batch is anti-joined against what already
+   landed (``_unseen`` for the exact-id sinks; text hashes for ingest,
+   normalized URLs for the crawl, an idempotent re-merge for upsert)
+   and materialized. File source + checkpoint gives exactly-once
+   *input*; the guard turns a replayed foreachBatch call (a crash
+   before the checkpoint commits) into exactly-once *output* — the
+   dedup the reference does racily, done atomically.
+2. **Compute.** The batch's keys are derived ONCE and probed against
+   the persisted index; corpus text is never re-hashed.
+3. **Durable writes in the documented order.** A frame appended to a
+   table its own plan reads is materialized first. Id-keyed indexes
+   (near, image, video) commit index-first (``_commit_index_first``);
+   the id-less span index and the semantic decisions go output-first,
+   each for the reason its sink states.
+4. **Crash points.** ``_crash_point(name)`` fires right after each
+   durable effect, so a test can kill the closure at every ordering
+   edge and replay.
+
+``_start_sink`` owns the checkpoint default and the trigger for all
+eight.
+
+Scale notes: the chunk/hash/embed stages are stateless -> no streaming
+state at all; only the sink-side anti-joins touch the index, and they
+read its key column only (column-pruned scan, broadcast-able). Per
+micro-batch the work is identical to the batch pipeline, so the 100 TB
+design notes in ``operators.ingest`` carry over; backlog catch-up is
+governed by maxFilesPerTrigger / availableNow.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 from data_ingestion_tool_bakasura__spark.session import reliable_checkpoint
 from data_ingestion_tool_bakasura__spark.operators.ingest import (
@@ -53,16 +86,16 @@ def _audit(name: str, df: DataFrame) -> None:
         BATCH_AUDIT_HOOK(name, df)
 
 
-#: r15 (r14 verdict #3) — crash-point injection seam for the streaming
-#: crawl sink's ordering contract. The sink performs up to five durable
-#: effects per micro-batch (archive publish, link-graph fold, ranks
-#: swap, bloom write, corpus append) whose ORDER is the crash-safety
-#: argument; the r14 review found ordering bugs one at a time, so the
-#: edges are now enumerable: when set, the sink calls the hook with a
-#: named point right after that step's effect lands, and a test raises
-#: from inside to simulate a driver crash at exactly that edge before
-#: the checkpoint commits. ``None`` in production — the cost is one
-#: truthiness check per point per micro-batch.
+#: r15 (r14 verdict #3) — crash-point injection seam for the sinks'
+#: ordering contracts. A sink performs one or more durable effects per
+#: micro-batch (the crawl up to five: archive publish, link-graph fold,
+#: ranks swap, bloom write, corpus append) whose ORDER is the
+#: crash-safety argument; the r14 review found ordering bugs one at a
+#: time, so the edges are now enumerable: when set, the sink calls the
+#: hook with a named point right after that step's effect lands, and a
+#: test raises from inside to simulate a driver crash at exactly that
+#: edge before the checkpoint commits. ``None`` in production — the
+#: cost is one truthiness check per point per micro-batch.
 CRASH_HOOK = None
 
 
@@ -111,6 +144,87 @@ def _has_table(path: str) -> bool:
     )
 
 
+def _read_or(path: str, empty: DataFrame) -> DataFrame:
+    """The table at ``path``, or ``empty`` (shaped like it) before its
+    first append."""
+    return empty.sparkSession.read.parquet(path) if _has_table(path) else empty
+
+
+def _unseen(batch_df: DataFrame, seen_path: str, id_col: str) -> DataFrame | None:
+    """The exact-id replay guard: drop the batch rows whose ``id_col``
+    already landed in ``seen_path`` (a micro-batch replayed after a
+    crash), materialize the rest, and return ``None`` when nothing is
+    left."""
+    if _has_table(seen_path):
+        seen = batch_df.sparkSession.read.parquet(seen_path).select(id_col)
+        batch_df = batch_df.join(seen, on=id_col, how="left_anti")
+    batch_df = reliable_checkpoint(batch_df)
+    return batch_df if batch_df.take(1) else None
+
+
+def _commit_index_first(
+    name: str,
+    audit_name: str,
+    batch_df: DataFrame,
+    id_col: str,
+    drop: DataFrame,
+    keys: DataFrame,
+    key_col: str,
+    index: DataFrame,
+    index_path: str,
+    corpus_path: str,
+) -> None:
+    """The durable writes of the id-keyed sinks (near, image, video):
+    the survivors' index rows, then the survivors themselves.
+
+    ``keys`` are the batch's already-computed index rows keyed by
+    ``key_col`` (no second hashing pass); ``drop`` is the one-column
+    frame of dropped ``id_col`` values; ``index`` is the UNFILTERED
+    persisted index — the orphan rows a probe excludes are exactly the
+    ones a replay must not append twice.
+
+    The INDEX appends first (r9 ADVICE on the image sink; near and
+    video adopted it r15). A crash between the two writes leaves index
+    rows whose ids are missing from the corpus: the replayed batch
+    survives the corpus-id guard (``_unseen``), the probe ignores the
+    batch's own ids, and the anti-join against ``index`` below
+    reconciles without double-indexing. Corpus-first had the opposite
+    failure: the corpus-id guard empties the replayed batch and the
+    survivors' index rows are LOST FOREVER — every future near-dup of
+    those items goes undetected. The id-less span index and the
+    semantic decisions keep the contrasting output-first order on
+    purpose: a span replay would cut against its own already-indexed
+    grams, and the semantic guard reads the index, so index-first
+    would empty the replay before its decisions land.
+    """
+    survivors = batch_df.join(F.broadcast(drop), on=id_col, how="left_anti")
+    to_index = keys.join(
+        F.broadcast(drop.toDF(key_col)), on=key_col, how="left_anti"
+    ).join(index.select(key_col).distinct(), on=key_col, how="left_anti")
+    # materialize: the append plan must not lazily read index_path
+    # while appending to it
+    reliable_checkpoint(to_index).write.mode("append").parquet(index_path)
+    _crash_point(f"{name}_index_written")
+    _audit(audit_name, survivors)
+    survivors.write.mode("append").parquet(corpus_path)
+    _crash_point(f"{name}_corpus_appended")
+
+
+def _start_sink(name: str, stream: DataFrame, sink, checkpoint: str | None,
+                available_now: bool):
+    """Start ``sink`` as ``stream``'s foreachBatch closure and return
+    the StreamingQuery. No ``checkpoint`` gets a fresh
+    ``<name>_ckpt_`` temp dir; ``available_now`` drains the backlog
+    then stops, otherwise the default trigger runs until stopped."""
+    writer = stream.writeStream.foreachBatch(sink).option(
+        "checkpointLocation",
+        checkpoint or tempfile.mkdtemp(prefix=f"{name}_ckpt_"),
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def _run_token(checkpoint: str) -> str:
     """Stable per-logical-stream token, persisted INSIDE the checkpoint
     directory (r14-late review): artifact keys derived from batch_id
@@ -122,9 +236,6 @@ def _run_token(checkpoint: str) -> str:
     checkpoint keeps the same keys (replay guards hold) while a wiped
     or fresh checkpoint gets fresh keys (new pages re-archive under new
     names — duplicate capture records, never silent omission)."""
-    import os
-    import uuid
-
     os.makedirs(checkpoint, exist_ok=True)
     tok_path = os.path.join(checkpoint, "_run_token")
     if os.path.exists(tok_path):
@@ -148,11 +259,12 @@ def start_incremental_ingest(
     """Start the incremental ingest query writing to a parquet index.
 
     Each micro-batch: chunk -> hash -> within-batch dedup -> anti-join
-    against the CURRENT index -> embed -> append. Returns the
-    StreamingQuery (caller awaits/stops).
+    against the CURRENT index -> embed -> append. The append is
+    idempotent w.r.t. replays only because the anti-join drops
+    already-indexed hashes. Returns the StreamingQuery (caller
+    awaits/stops).
     """
     cfg = cfg or IngestConfig()
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="ingest_ckpt_")
     local_idx = _local_or_raise(index_path, "start_incremental_ingest")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -168,18 +280,13 @@ def start_incremental_ingest(
         )
         rows = ingest_documents(batch_df, index=index, cfg=cfg)
         # materialize before the self-append: the plan lazily reads
-        # index_path (the anti-join) while appending to it — the same
-        # discipline the image/video/crawl sinks document
+        # index_path (the anti-join) while appending to it
         rows = reliable_checkpoint(rows)
         _audit("incremental_ingest", rows)
         rows.write.mode("append").parquet(index_path)
+        _crash_point("ingest_appended")
 
-    writer = docs_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink("ingest", docs_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_upsert(
@@ -216,31 +323,21 @@ def start_streaming_upsert(
     the 100 TB form of this sink (r6 verdict #7).
     """
     from data_ingestion_tool_bakasura__spark.operators.upsert import (
+        elect_winners,
         upsert_into_path,
     )
-
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="upsert_ckpt_")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if BATCH_AUDIT_HOOK is not None:
             # audit the election half (the merge's shuffle shape);
             # the MERGE/swap itself happens inside upsert_into_path
-            from data_ingestion_tool_bakasura__spark.operators.upsert import (
-                elect_winners,
-            )
-
             _audit("streaming_upsert",
                    elect_winners(batch_df, key=key, order_by=order_by))
         upsert_into_path(
             batch_df.sparkSession, table_path, batch_df, key=key, order_by=order_by
         )
 
-    writer = updates_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink("upsert", updates_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_near_dedup(
@@ -272,48 +369,28 @@ def start_streaming_near_dedup(
     banding parameters; pipe candidates through ``jaccard_pairs`` before
     dropping if exact verification is required.
 
-    Replay-idempotent by exact id: each batch is first anti-joined
-    against the corpus on ``id_col``, so a fully-landed micro-batch
-    replayed after a crash contributes no second copy of an
-    already-indexed doc. The LSH near-dup check alone would NOT catch
-    this — a replayed doc does not near-duplicate its own first
-    delivery (its orphan index rows are excluded from the probe). The
-    guard is one column-pruned scan of corpus ids per batch, the same
-    order of work as the band-index probe itself.
-    Residual window (r15 reorder — the image/video closures' crash
-    argument): the INDEX appends first, so a crash between the two
-    writes leaves orphan band keys whose docs are missing from the
-    corpus; the replayed batch passes the corpus guard, its own orphan
-    rows are dropped from the probe index (no double-counting against
-    the bucket cap, no self-pairs), it recomputes the same drop set,
-    lands the corpus rows, and the index anti-join prevents a second
-    key append. The OLD corpus-first order lost the survivors' band
-    keys forever on that crash — every future near-dup of those docs
-    went undetected.
+    Replay and crash safety follow the module's skeleton contract: the
+    exact-id guard against corpus ids, then the index-first commit
+    (``_commit_index_first``). The LSH near-dup check alone would NOT
+    catch a replay — a replayed doc does not near-duplicate its own
+    first delivery (its orphan index rows are excluded from the probe).
+    The guard is one column-pruned scan of corpus ids per batch, the
+    same order of work as the band-index probe itself.
     """
     from data_ingestion_tool_bakasura__spark.operators.dedup import (
         lsh_band_index,
         minhash_lsh_increment,
     )
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="neardedup_ckpt_")
     _local_or_raise(corpus_path, "start_streaming_near_dedup corpus_path")
     _local_or_raise(index_path, "start_streaming_near_dedup index_path")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
         # exact-id replay guard: docs already in the corpus (a replayed
         # micro-batch after crash/restart) are dropped up front — the
         # near-dup check below can't do this, it ignores self-id pairs
-        if _has_table(corpus_path):
-            indexed = spark.read.parquet(corpus_path).select(F.col(id_col))
-            batch_df = batch_df.join(indexed, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
+        batch_df = _unseen(batch_df, corpus_path, id_col)
+        if batch_df is None:
             return
         # Hash the batch ONCE: these uncapped band keys feed both the
         # near-dup probe (which applies the bucket cap internally) and,
@@ -322,15 +399,10 @@ def start_streaming_near_dedup(
         batch_keys = lsh_band_index(
             batch_df, text_col, id_col, num_hashes, bands, shingle_n
         ).transform(reliable_checkpoint)
-        have_index = _has_table(index_path)
         # first batch: the empty index derives its schema from the
         # batch's OWN keys (r14-late review — the hardcoded
         # '_id long' form broke string ids under ANSI type checks)
-        raw_index = (
-            spark.read.parquet(index_path)
-            if have_index
-            else batch_keys.limit(0)
-        )
+        raw_index = _read_or(index_path, batch_keys.limit(0))
         # drop the batch's OWN orphan rows from the probe index (r15
         # review, the image closure's discipline): a replay after a
         # crash at neardedup_index_written otherwise counts each
@@ -364,45 +436,12 @@ def start_streaming_near_dedup(
         ).join(new_ids.select(F.col(id_col).alias("id_b")), on="id_b", how="left_semi")
         dup_in_batch = both_new.select(F.greatest("id_a", "id_b").alias(id_col))
         drop = dup_vs_corpus.unionByName(dup_in_batch).distinct()
-        survivors = batch_df.join(F.broadcast(drop), on=id_col, how="left_anti")
-        # index append FIRST — the image/video closures' crash-ordering
-        # argument verbatim (r9 ADVICE there; this sink adopted it r15):
-        # a crash between the two writes leaves band keys whose ids are
-        # missing from the corpus; the replayed batch survives the
-        # corpus-id guard above, self-id pairs are ignored by the
-        # probe, and the anti-join below reconciles without
-        # double-indexing. Corpus-first had the opposite failure: the
-        # corpus-id guard empties the replayed batch and the survivors'
-        # band keys are LOST FOREVER — every future near-dup of those
-        # docs undetected.
-        # survivors' index rows = the already-computed batch keys minus
-        # the dropped docs (no second MinHash pass over the text)
-        to_index = batch_keys.join(
-            F.broadcast(drop.select(F.col(id_col).alias("_id"))),
-            on="_id",
-            how="left_anti",
+        _commit_index_first(
+            "neardedup", "near_dedup", batch_df, id_col, drop,
+            batch_keys, "_id", raw_index, index_path, corpus_path,
         )
-        if have_index:
-            # guard against the UNFILTERED index: the orphan rows the
-            # probe filter excluded are exactly the ones a replay must
-            # not append twice
-            to_index = to_index.join(
-                raw_index.select("_id").distinct(), on="_id", how="left_anti"
-            )
-        # materialize: the append plan must not lazily read index_path
-        # while appending to it
-        reliable_checkpoint(to_index).write.mode("append").parquet(index_path)
-        _crash_point("neardedup_index_written")
-        _audit("near_dedup", survivors)
-        survivors.write.mode("append").parquet(corpus_path)
-        _crash_point("neardedup_corpus_appended")
 
-    writer = docs_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink("neardedup", docs_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_semantic_dedup(
@@ -445,37 +484,24 @@ def start_streaming_semantic_dedup(
     Centroids are fit once offline (kmeans on a sample — see
     ``kmeans_centroids``), exactly SemDeDup's serving shape.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from data_ingestion_tool_bakasura__spark.operators.dedup import (
         semantic_dedup_increment,
     )
     from data_ingestion_tool_bakasura__spark.operators.similarity import ivf_assign
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="semdedup_ckpt_")
     _local_or_raise(decisions_path, "start_streaming_semantic_dedup decisions_path")
     _local_or_raise(index_path, "start_streaming_semantic_dedup index_path")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        have_index = _has_table(index_path)
-        if have_index:
-            seen = spark.read.parquet(index_path).select(F.col(id_col))
-            batch_df = batch_df.join(seen, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
+        batch_df = _unseen(batch_df, index_path, id_col)
+        if batch_df is None:
             return
         # assign ONCE: these rows feed both the probe and the index append
         assigned = ivf_assign(
             batch_df, centroids, corpus_id=id_col, vec_col=vec_col, round_dp=round_dp
         ).transform(reliable_checkpoint)
-        index = (
-            spark.read.parquet(index_path)
-            if have_index
-            else assigned.limit(0)
-        )
+        index = _read_or(index_path, assigned.limit(0))
         decisions = semantic_dedup_increment(
             batch_df, index, centroids, eps,
             id_col=id_col, vec_col=vec_col, round_dp=round_dp,
@@ -490,7 +516,7 @@ def start_streaming_semantic_dedup(
         # unchanged by the crashed attempt), so an anti-join by id
         # against what already landed makes the append idempotent.
         if _has_table(decisions_path):
-            prior = spark.read.parquet(decisions_path).select(F.col(id_col))
+            prior = spark.read.parquet(decisions_path).select(id_col)
             decisions = decisions.join(prior, on=id_col, how="left_anti")
         _audit("semantic_dedup", decisions)
         # materialize: the append plan must not lazily read
@@ -501,12 +527,7 @@ def start_streaming_semantic_dedup(
         assigned.write.mode("append").parquet(index_path)
         _crash_point("semdedup_index_appended")
 
-    writer = vecs_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink("semdedup", vecs_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_span_dedup(
@@ -536,81 +557,48 @@ def start_streaming_span_dedup(
     index append goes LAST because the opposite order is the dangerous
     one — with the index landing first, a crash before the cleaned
     append would replay the batch with its own grams already indexed,
-    and its spans would cut against themselves. The residual window of
-    the actual order (cleaned landed, index not) merely leaves the
-    batch's novel grams unindexed for future batches — bounded, never
-    output-corrupting. NOTE this is the OPPOSITE order from the
-    LSH/image/video sinks (r15): those indexes are id-keyed, so
-    index-first is replay-safe there and corpus-first would lose the
-    keys; this gram index is id-LESS, so index-first would self-poison
-    and cleaned-first is the only safe order.
+    and its spans would cut against themselves. The window of the
+    actual order (cleaned landed, index not) closes on replay: the
+    index append covers the grams of the WHOLE batch, guard-dropped
+    docs included, minus the grams already indexed — so the replay
+    appends exactly the grams the crashed attempt missed. NOTE this is
+    the OPPOSITE order from the LSH/image/video sinks (r15): those
+    indexes are id-keyed, so index-first is replay-safe there and
+    corpus-first would lose the keys; this gram index is id-LESS, so
+    index-first would self-poison and cleaned-first is the only safe
+    order.
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     from data_ingestion_tool_bakasura__spark.operators.dedup import (
         remove_repeated_spans_increment,
         span_gram_index,
     )
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="spandedup_ckpt_")
     _local_or_raise(cleaned_path, "start_streaming_span_dedup cleaned_path")
     _local_or_raise(index_path, "start_streaming_span_dedup index_path")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if _has_table(cleaned_path):
-            done = spark.read.parquet(cleaned_path).select(F.col(id_col))
-            batch_df = batch_df.join(done, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
-            return
-        have_index = _has_table(index_path)
-        index = (
-            spark.read.parquet(index_path)
-            if have_index
-            else spark.createDataFrame([], "gh long")
-        )
-        cleaned = remove_repeated_spans_increment(
-            batch_df, index, n=n, text_col=text_col, id_col=id_col
+        index = _read_or(index_path, spark.createDataFrame([], "gh long"))
+        fresh = _unseen(batch_df, cleaned_path, id_col)
+        if fresh is not None:
+            cleaned = remove_repeated_spans_increment(
+                fresh, index, n=n, text_col=text_col, id_col=id_col
+            ).transform(reliable_checkpoint)
+            _audit("span_dedup", cleaned)
+            cleaned.write.mode("append").parquet(cleaned_path)
+            _crash_point("spandedup_cleaned_appended")
+        # pre-surgery grams of the whole batch (see docstring); the
+        # anti-join keeps the index append-only on distinct hashes (no
+        # duplicate gh rows across batches or replays)
+        new_grams = span_gram_index(
+            batch_df, n=n, text_col=text_col, id_col=id_col
+        ).join(
+            index.select("gh"), on="gh", how="left_anti"
         ).transform(reliable_checkpoint)
-        # pre-surgery grams; the anti-join keeps the index append-only
-        # on distinct hashes (no duplicate gh rows across batches)
-        new_grams = span_gram_index(batch_df, n=n, text_col=text_col, id_col=id_col)
-        new_grams = new_grams.join(
-            index.select(F.col("gh")), on="gh", how="left_anti"
-        ).transform(reliable_checkpoint)
-        # cleaned FIRST is deliberate here, unlike the LSH/image/video
-        # closures (r15 ordering sweep): the gram index is id-LESS
-        # (distinct gh hashes), so index-first would SELF-POISON a
-        # replay — the batch's own pre-surgery grams would count as
-        # "ever seen" and every span of the replayed docs would be cut.
-        # The cost of cleaned-first is bounded: a crash between the two
-        # appends loses ONE batch's new grams (future repeats of those
-        # spans go undetected), never corrupts output.
-        _audit("span_dedup", cleaned)
-        cleaned.write.mode("append").parquet(cleaned_path)
         new_grams.write.mode("append").parquet(index_path)
+        _crash_point("spandedup_index_appended")
 
-    writer = docs_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-__all__ = [
-    "IngestConfig",
-    "dedup_against_index",
-    "start_incremental_ingest",
-    "start_streaming_near_dedup",
-    "start_streaming_semantic_dedup",
-    "start_streaming_span_dedup",
-    "start_streaming_upsert",
-    "stream_documents",
-]
+    return _start_sink("spandedup", docs_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_image_dedup(
@@ -637,45 +625,30 @@ def start_streaming_image_dedup(
     the corpus side contributes only its hash rows, so a year of
     daily media drops costs a year of increments.
 
-    Replay-idempotent twice over: an exact-id guard anti-joins the
-    batch against corpus ids up front (a replayed micro-batch after a
-    crash between the two appends contributes nothing), and the
-    increment itself drops wave ids already present in the hash index.
-    The oversized-band boilerplate cap applies per batch over
-    index+wave combined populations.
+    Replay-idempotent twice over: the module's skeleton contract (the
+    exact-id guard against corpus ids, then ``_commit_index_first``),
+    and the increment itself drops wave ids already present in the
+    hash index. The oversized-band boilerplate cap applies per batch
+    over index+wave combined populations.
     """
     from data_ingestion_tool_bakasura__spark.multimodal.media import (
         image_hash_index,
         image_near_dup_increment,
     )
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="imgdedup_ckpt_")
     _local_or_raise(corpus_path, "start_streaming_image_dedup corpus_path")
     _local_or_raise(index_path, "start_streaming_image_dedup index_path")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        if _has_table(corpus_path):
-            seen = spark.read.parquet(corpus_path).select(F.col(id_col))
-            batch_df = batch_df.join(seen, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
+        batch_df = _unseen(batch_df, corpus_path, id_col)
+        if batch_df is None:
             return
         # hash the batch ONCE: feeds the near-dup probe AND (filtered
         # to survivors) the index append
         batch_h = image_hash_index(
             batch_df, id_col=id_col, payload_col=payload_col
         ).transform(reliable_checkpoint)
-        have_index = _has_table(index_path)
-        index = (
-            spark.read.parquet(index_path)
-            if have_index
-            else batch_h.limit(0)
-        )
+        index = _read_or(index_path, batch_h.limit(0))
         pairs = image_near_dup_increment(
             index, batch_df, id_col=id_col, payload_col=payload_col,
             bands=bands, max_hamming=max_hamming,
@@ -684,36 +657,12 @@ def start_streaming_image_dedup(
         # id_b is always the duplicate side (index witness or larger
         # within-batch id), so the drop set is exactly the id_b column
         drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        survivors = batch_df.join(F.broadcast(drop), on=id_col, how="left_anti")
-        # write ORDER matters for replay (r9 ADVICE): the index append
-        # goes FIRST. A crash between the two writes then leaves hash
-        # rows whose ids are missing from the corpus; the replayed
-        # batch survives the corpus-id guard above and the anti-join
-        # below reconciles the corpus side without double-indexing.
-        # (Corpus-first had the opposite failure: the corpus-id guard
-        # skips the replayed batch and the survivors' hash rows are
-        # lost forever — future near-dups of those images undetected.)
-        to_index = batch_h.withColumnRenamed("media_id", id_col).join(
-            F.broadcast(drop), on=id_col, how="left_anti"
-        ).withColumnRenamed(id_col, "media_id")
-        if have_index:
-            to_index = to_index.join(
-                index.select("media_id"), on="media_id", how="left_anti"
-            )
-        _audit("image_dedup", survivors)
-        # materialize: the append plan must not lazily read index_path
-        # while appending to it
-        reliable_checkpoint(to_index).write.mode("append").parquet(index_path)
-        _crash_point("imagededup_index_written")
-        survivors.write.mode("append").parquet(corpus_path)
-        _crash_point("imagededup_corpus_appended")
+        _commit_index_first(
+            "imagededup", "image_dedup", batch_df, id_col, drop,
+            batch_h, "media_id", index, index_path, corpus_path,
+        )
 
-    writer = media_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink("imgdedup", media_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_video_dedup(
@@ -739,42 +688,29 @@ def start_streaming_video_dedup(
     ``id_b`` always the duplicate side); across batches first arrival
     wins. Videos are sampled + hashed exactly once per video, ever.
 
-    Same replay/crash contracts as the image closure: exact-id guard
-    against corpus ids up front; the increment drops wave ids already
-    in the fingerprint index; the INDEX append goes first so a crash
-    between the two writes leaves reconcilable orphan fingerprints,
-    never silently-unindexed survivors; the hot-frame boilerplate cap
-    applies per batch over index+wave combined populations."""
+    Same replay/crash contract as the image closure (the module's
+    skeleton contract, ``_commit_index_first``); the increment drops
+    wave ids already in the fingerprint index; the hot-frame
+    boilerplate cap applies per batch over index+wave combined
+    populations."""
     from data_ingestion_tool_bakasura__spark.multimodal.media import (
         video_fingerprint_index,
         video_near_dup_increment,
     )
 
-    checkpoint = checkpoint or tempfile.mkdtemp(prefix="viddedup_ckpt_")
     _local_or_raise(corpus_path, "start_streaming_video_dedup corpus_path")
     _local_or_raise(index_path, "start_streaming_video_dedup index_path")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
-        if _has_table(corpus_path):
-            seen = spark.read.parquet(corpus_path).select(F.col(id_col))
-            batch_df = batch_df.join(seen, on=id_col, how="left_anti")
-        batch_df = batch_df.transform(reliable_checkpoint)
-        if not batch_df.take(1):
+        batch_df = _unseen(batch_df, corpus_path, id_col)
+        if batch_df is None:
             return
         # sample + hash the batch ONCE: feeds the near-dup probe AND
         # (filtered to survivors) the index append
         batch_fp = video_fingerprint_index(
             batch_df, id_col=id_col, media_col=media_col, every_k=every_k
         ).transform(reliable_checkpoint)
-        have_index = _has_table(index_path)
-        index = (
-            spark.read.parquet(index_path) if have_index else batch_fp.limit(0)
-        )
+        index = _read_or(index_path, batch_fp.limit(0))
         pairs = video_near_dup_increment(
             index, batch_df, id_col=id_col, media_col=media_col,
             every_k=every_k, min_jaccard=min_jaccard,
@@ -782,32 +718,12 @@ def start_streaming_video_dedup(
             new_fingerprints=batch_fp,
         )
         drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        survivors = batch_df.join(F.broadcast(drop), on=id_col, how="left_anti")
-        # index append FIRST — the image closure's crash-ordering
-        # argument verbatim (orphan fingerprints reconcile on replay;
-        # corpus-first would lose survivors' fingerprints forever)
-        to_index = batch_fp.withColumnRenamed("video_id", id_col).join(
-            F.broadcast(drop), on=id_col, how="left_anti"
-        ).withColumnRenamed(id_col, "video_id")
-        if have_index:
-            to_index = to_index.join(
-                index.select("video_id").distinct(),
-                on="video_id", how="left_anti",
-            )
-        _audit("video_dedup", survivors)
-        # materialize: the append plan must not lazily read index_path
-        # while appending to it
-        reliable_checkpoint(to_index).write.mode("append").parquet(index_path)
-        _crash_point("videodedup_index_written")
-        survivors.write.mode("append").parquet(corpus_path)
-        _crash_point("videodedup_corpus_appended")
+        _commit_index_first(
+            "videodedup", "video_dedup", batch_df, id_col, drop,
+            batch_fp, "video_id", index, index_path, corpus_path,
+        )
 
-    writer = media_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink("viddedup", media_stream, _sink, checkpoint, available_now)
 
 
 def start_streaming_crawl(
@@ -990,6 +906,7 @@ def start_streaming_crawl(
     from data_ingestion_tool_bakasura__spark.operators import crawl as CR
     from data_ingestion_tool_bakasura__spark.sources.warc import decode_payload_udf
 
+    # resolved here, not in _start_sink: _run_token keys off it
     checkpoint = checkpoint or tempfile.mkdtemp(prefix="crawl_ckpt_")
     _local_or_raise(corpus_path, "start_streaming_crawl corpus_path")
     # the checkpoint must be driver-local too (r15, from the r14
@@ -1018,8 +935,6 @@ def start_streaming_crawl(
         # would pollute read-back forever. One writer per archive_path
         # (one streaming driver, the documented contract) makes the
         # sweep safe: any *_tmp entry at start belongs to a dead run.
-        import shutil as _shutil
-
         # only the attempt dirs THIS sink creates (batch-<token>-<id>_tmp,
         # directories) — r15 review: a bare *_tmp match would rmtree a
         # stray FILE (NotADirectoryError wedging stream start) or, with a
@@ -1031,7 +946,7 @@ def start_streaming_crawl(
                 p = os.path.join(aroot, e)
                 if (e.startswith("batch-") and e.endswith("_tmp")
                         and os.path.isdir(p)):
-                    _shutil.rmtree(p)
+                    shutil.rmtree(p)
     # run-scoped artifact keys (see _run_token): archive dirs and graph
     # wave ids must not collide across checkpoint generations
     token = _run_token(local_ckpt)
@@ -1044,8 +959,6 @@ def start_streaming_crawl(
 
         if bloom_holder:
             return bloom_holder[0]
-        import os
-
         path = corpus_path.removeprefix("file://") + "_bloom"
         kw = dict(seen_bloom) if isinstance(seen_bloom, dict) else {}
         have_corpus = _has_table(corpus_path)
@@ -1070,15 +983,11 @@ def start_streaming_crawl(
         return b
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        spark = batch_df.sparkSession
         from data_ingestion_tool_bakasura__spark.operators.maintenance import (
             recover_swap,
         )
+
+        spark = batch_df.sparkSession
 
         # un-wedge a crash between a prior swap's two renames BEFORE any
         # exists-check or read (r14-late review): the corpus seen-guard
@@ -1151,214 +1060,211 @@ def start_streaming_crawl(
             batch = batch.filter(
                 F.col("_rk") + F.col("_n_have") <= max_per_domain_total
             ).drop("_rk", "_n_have", "_dom2")
-        archived_batch = None
-        # try/finally (r14-late review): a batch failing AFTER the
-        # persist() must release its cached blocks — retried attempts
-        # otherwise accumulate executor storage for the stream's life
-        try:
-            if archive_path:
-                # archive BEFORE corpus (crash ordering, see docstring).
-                # Write-to-tmp + atomic rename + exists-guard: a batch dir
-                # that EXISTS is a completed first attempt and is never
-                # touched again — a replay AFTER the corpus append sees an
-                # emptied batch (the seen-guard drops every row) and a
-                # naive rewrite would destroy the published archive (r12
-                # review finding); a crash DURING the write leaves only
-                # the tmp dir, which the replay clears and rewrites.
-                import shutil
+        if archive_path:
+            # archive BEFORE corpus (crash ordering, see docstring).
+            # Write-to-tmp + atomic rename + exists-guard: a batch dir
+            # that EXISTS is a completed first attempt and is never
+            # touched again — a replay AFTER the corpus append sees an
+            # emptied batch (the seen-guard drops every row) and a
+            # naive rewrite would destroy the published archive (r12
+            # review finding); a crash DURING the write leaves only
+            # the tmp dir, which the replay clears and rewrites.
+            from data_ingestion_tool_bakasura__spark.sources.warc import (
+                write_warc,
+            )
 
-                from data_ingestion_tool_bakasura__spark.sources.warc import (
-                    write_warc,
-                )
-
-                # the archive leg adds its own action over the gated batch;
-                # persist so the corpus append below reuses the computed
-                # rows instead of re-running the whole gate stack
-                batch = batch.persist()
-                archived_batch = batch
-                adir = os.path.join(
-                    archive_path.removeprefix("file://"),
-                    f"batch-{token}-{batch_id:05d}",
-                )
-                # skip EMPTY gated batches: a checkpoint-loss replay
-                # whose rows were all corpus-seen must not litter the
-                # archive with empty batch dirs under the new run token
-                if not os.path.exists(adir) and batch.take(1):
-                    tmp_dir = adir + "_tmp"
-                    if os.path.exists(tmp_dir):
-                        shutil.rmtree(tmp_dir)  # partial crashed attempt
-                    date_col = ("warc_date" if "warc_date" in batch.columns
-                                else None)
-                    asrc = batch
-                    if date_col is None:
-                        asrc = asrc.withColumn(
-                            "_adate", F.lit("1970-01-01T00:00:00Z")
-                        )
-                        date_col = "_adate"
-                    write_warc(
-                        asrc, tmp_dir, url_col=url_col, date_col=date_col,
-                        payload_col=payload_col,
-                        status_col="http_status", ctype_col="content_type",
-                        gzip_members=True, cdx=True,
-                        cdx_filename_prefix=f"batch-{token}-{batch_id:05d}/",
-                        warcinfo={"software": "bakasura-spark streaming crawl",
-                                  "format": "WARC File Format 1.0"},
+            # the archive leg adds its own action over the gated batch;
+            # materialize so the corpus append below reuses the computed
+            # rows instead of re-running the whole gate stack (the
+            # checkpoint is GC-scoped: a failed attempt leaks no cache)
+            batch = reliable_checkpoint(batch)
+            adir = os.path.join(
+                archive_path.removeprefix("file://"),
+                f"batch-{token}-{batch_id:05d}",
+            )
+            # skip EMPTY gated batches: a checkpoint-loss replay
+            # whose rows were all corpus-seen must not litter the
+            # archive with empty batch dirs under the new run token
+            if not os.path.exists(adir) and batch.take(1):
+                tmp_dir = adir + "_tmp"
+                if os.path.exists(tmp_dir):
+                    shutil.rmtree(tmp_dir)  # partial crashed attempt
+                date_col = ("warc_date" if "warc_date" in batch.columns
+                            else None)
+                asrc = batch
+                if date_col is None:
+                    asrc = asrc.withColumn(
+                        "_adate", F.lit("1970-01-01T00:00:00Z")
                     )
-                    _crash_point("archive_tmp_written")
-                    os.makedirs(os.path.dirname(adir), exist_ok=True)
-                    os.rename(tmp_dir, adir)
-                    _crash_point("archive_published")
-            # WET streams (read_wet) carry already-extracted text: when the
-            # payload column is a STRING it is used verbatim; binary
-            # payloads (read_warc) take the charset-decode + html_to_text
-            # leg. One closure serves both Common-Crawl formats.
-            link_html = None
-            if dict(batch.dtypes).get(payload_col) == "string":
-                text_expr = F.col(payload_col)
+                    date_col = "_adate"
+                write_warc(
+                    asrc, tmp_dir, url_col=url_col, date_col=date_col,
+                    payload_col=payload_col,
+                    status_col="http_status", ctype_col="content_type",
+                    gzip_members=True, cdx=True,
+                    cdx_filename_prefix=f"batch-{token}-{batch_id:05d}/",
+                    warcinfo={"software": "bakasura-spark streaming crawl",
+                              "format": "WARC File Format 1.0"},
+                )
+                _crash_point("archive_tmp_written")
+                os.makedirs(os.path.dirname(adir), exist_ok=True)
+                os.rename(tmp_dir, adir)
+                _crash_point("archive_published")
+        # WET streams (read_wet) carry already-extracted text: when the
+        # payload column is a STRING it is used verbatim; binary
+        # payloads (read_warc) take the charset-decode + html_to_text
+        # leg. One closure serves both Common-Crawl formats.
+        link_html = None
+        if dict(batch.dtypes).get(payload_col) == "string":
+            text_expr = F.col(payload_col)
+        else:
+            ctype = (F.col("content_type") if "content_type" in batch.columns
+                     else F.lit("text/html"))
+            decoded = decode_payload_udf()(F.col(payload_col), ctype)
+            if link_graph_path:
+                link_html = batch.select(
+                    F.col(url_col).alias("url"), decoded.alias("html")
+                )
+            if boilerplate_removal:
+                from data_ingestion_tool_bakasura__spark.functions.boilerplate import (
+                    extract_main_content,
+                )
+
+                th = (boilerplate_removal
+                      if isinstance(boilerplate_removal, dict) else {})
+                # norm_url is unique within the batch here (post-dedup),
+                # so it keys the block window and the re-join
+                html_df = batch.withColumn("_html", decoded)
+                mc = extract_main_content(html_df, "_html", "norm_url", **th)
+                batch = html_df.join(
+                    mc.select("norm_url", "main_text"), "norm_url"
+                ).drop("_html")
+                text_expr = F.col("main_text")
             else:
-                ctype = (F.col("content_type") if "content_type" in batch.columns
-                         else F.lit("text/html"))
-                decoded = decode_payload_udf()(F.col(payload_col), ctype)
-                if link_graph_path:
-                    link_html = batch.select(
-                        F.col(url_col).alias("url"), decoded.alias("html")
-                    )
-                if boilerplate_removal:
-                    from data_ingestion_tool_bakasura__spark.functions.boilerplate import (
-                        extract_main_content,
-                    )
+                text_expr = html_to_text_udf()(decoded)
+        out = batch.select(
+            "norm_url",
+            F.col(url_col).alias("url"),
+            U.registrable_domain(U.url_host(F.col(url_col))).alias("domain"),
+            text_expr.alias("text"),
+        ).withColumn("n_chars", F.length("text"))
+        if langid_profiles_path:
+            profiles = spark.read.parquet(langid_profiles_path)
+            out = CR.language_filter(
+                out, profiles, allowed_langs=allowed_langs,
+                text_col="text", id_col="norm_url", keep_und=keep_und,
+            )
+        else:
+            out = out.withColumn("lang", F.lit(None).cast("string"))
+        if quality_gate:
+            out = CR.web_quality_filter(out, "text", quality_gate).withColumn(
+                "n_chars", F.length("text")
+            )
+        # log_weight is ALWAYS in the output schema (NULL when DSIR is
+        # off): toggling dsir_ratios_path across runs of one corpus_path
+        # must not produce mixed-schema parquet files — the seen-guard /
+        # domain-count reads above use plain spark.read.parquet (no
+        # mergeSchema) and would otherwise drop or trip on the column.
+        if dsir_ratios_path:
+            from data_ingestion_tool_bakasura__spark.operators.sampling import (
+                dsir_apply,
+            )
 
-                    th = (boilerplate_removal
-                          if isinstance(boilerplate_removal, dict) else {})
-                    # norm_url is unique within the batch here (post-dedup),
-                    # so it keys the block window and the re-join
-                    html_df = batch.withColumn("_html", decoded)
-                    mc = extract_main_content(html_df, "_html", "norm_url", **th)
-                    batch = html_df.join(
-                        mc.select("norm_url", "main_text"), "norm_url"
-                    ).drop("_html")
-                    text_expr = F.col("main_text")
-                else:
-                    text_expr = html_to_text_udf()(decoded)
-            out = batch.select(
+            ratios = spark.read.parquet(dsir_ratios_path)
+            scored = dsir_apply(
+                out.select(F.col("norm_url").alias("doc_id"), "text"), ratios
+            ).filter(F.col("log_weight") >= dsir_min_weight)
+            out = out.join(
+                scored.select(F.col("doc_id").alias("norm_url"), "log_weight"),
                 "norm_url",
-                F.col(url_col).alias("url"),
-                U.registrable_domain(U.url_host(F.col(url_col))).alias("domain"),
-                text_expr.alias("text"),
-            ).withColumn("n_chars", F.length("text"))
-            if langid_profiles_path:
-                profiles = spark.read.parquet(langid_profiles_path)
-                out = CR.language_filter(
-                    out, profiles, allowed_langs=allowed_langs,
-                    text_col="text", id_col="norm_url", keep_und=keep_und,
-                )
-            else:
-                out = out.withColumn("lang", F.lit(None).cast("string"))
-            if quality_gate:
-                out = CR.web_quality_filter(out, "text", quality_gate).withColumn(
-                    "n_chars", F.length("text")
-                )
-            # log_weight is ALWAYS in the output schema (NULL when DSIR is
-            # off): toggling dsir_ratios_path across runs of one corpus_path
-            # must not produce mixed-schema parquet files — the seen-guard /
-            # domain-count reads above use plain spark.read.parquet (no
-            # mergeSchema) and would otherwise drop or trip on the column.
-            if dsir_ratios_path:
-                from data_ingestion_tool_bakasura__spark.operators.sampling import (
-                    dsir_apply,
-                )
+            )
+        else:
+            out = out.withColumn("log_weight", F.lit(None).cast("double"))
+        # materialize before the append: the plan lazily reads
+        # corpus_path (the seen-guard) while appending to it
+        out = reliable_checkpoint(out)
+        if link_html is not None:
+            # graph BEFORE corpus (crash ordering): a crash in between
+            # replays the batch, the wave-id guard no-ops the graph
+            # append and the corpus probe still lands the pages; the
+            # reverse order would lose the batch's links forever (the
+            # replayed batch dedups to empty before extraction)
+            from data_ingestion_tool_bakasura__spark.operators import (
+                linkgraph as LG,
+            )
 
-                ratios = spark.read.parquet(dsir_ratios_path)
-                scored = dsir_apply(
-                    out.select(F.col("norm_url").alias("doc_id"), "text"), ratios
-                ).filter(F.col("log_weight") >= dsir_min_weight)
-                out = out.join(
-                    scored.select(F.col("doc_id").alias("norm_url"), "log_weight"),
-                    "norm_url",
-                )
-            else:
-                out = out.withColumn("log_weight", F.lit(None).cast("double"))
-            # materialize before the append: the plan lazily reads
-            # corpus_path (the seen-guard) while appending to it
-            out = reliable_checkpoint(out)
-            if link_html is not None:
-                # graph BEFORE corpus (crash ordering): a crash in between
-                # replays the batch, the wave-id guard no-ops the graph
-                # append and the corpus probe still lands the pages; the
-                # reverse order would lose the batch's links forever (the
-                # replayed batch dedups to empty before extraction)
-                from data_ingestion_tool_bakasura__spark.operators import (
-                    linkgraph as LG,
-                )
-
-                LG.host_graph_increment(
-                    spark, link_graph_path,
-                    LG.extract_links_html(link_html, "html", "url"),
-                    wave_id=f"{token}-batch-{batch_id}",
-                )
-                _crash_point("graph_folded")
-                if (ranks_refresh_every and host_ranks_path
-                        and batch_id % ranks_refresh_every == 0):
-                    from data_ingestion_tool_bakasura__spark.operators.maintenance import (
-                        swap_directory,
-                    )
-
-                    # pagerank persists its edge/nodes/transition/contribs
-                    # frames; this loop re-ranks every N batches for the
-                    # stream's lifetime, so release them once the write
-                    # (the materializing action) lands — otherwise cached
-                    # frames accumulate unboundedly (r11 ADVICE finding)
-                    rank_persists: list = []
-                    ranks = LG.pagerank(
-                        LG.load_host_graph(spark, link_graph_path),
-                        weight_col="n_links",
-                        persisted=rank_persists,
-                    )
-                    try:
-                        dst = host_ranks_path.removeprefix("file://")
-                        if os.path.exists(dst):
-                            tmp = dst.rstrip("/") + "_ranks_tmp"
-                            ranks.write.mode("overwrite").parquet(tmp)
-                            swap_directory(spark, dst, tmp)
-                        else:
-                            ranks.write.parquet(dst)
-                    finally:
-                        for frame in rank_persists:
-                            frame.unpersist()
-                    _crash_point("ranks_swapped")
-            if seen_bloom:
-                # bloom BEFORE corpus (superset invariant): a crash between
-                # the two leaves extra bits — harmless, the maybe-seen rows
-                # re-resolve through the exact check on replay; the reverse
-                # order could leave a landed URL out of the bitmap and
-                # silently re-land it later
-                _bloom(spark).add_df(out.select("norm_url"), "norm_url")
-                _crash_point("bloom_written")
-            _audit("crawl", out)
-            out.write.mode("append").parquet(corpus_path)
-            _crash_point("corpus_appended")
-            if (compact_every and batch_id > 0
-                    and batch_id % compact_every == 0
-                    and _has_table(corpus_path)):
+            LG.host_graph_increment(
+                spark, link_graph_path,
+                LG.extract_links_html(link_html, "html", "url"),
+                wave_id=f"{token}-batch-{batch_id}",
+            )
+            _crash_point("graph_folded")
+            if (ranks_refresh_every and host_ranks_path
+                    and batch_id % ranks_refresh_every == 0):
                 from data_ingestion_tool_bakasura__spark.operators.maintenance import (
-                    compact,
+                    swap_directory,
                 )
 
-                # layout-only rewrite AFTER the append (a crash here loses
-                # nothing: rows are already durable; the swap restores on
-                # failure). Runs inside foreachBatch, so no reader races
-                # with the swap within this stream.
-                compact(spark, corpus_path.removeprefix("file://"))
-        finally:
-            if archived_batch is not None:
-                # release the per-batch cache once the corpus append
-                # (the last consumer of the gated batch's lineage)
-                # has landed — or the attempt failed
-                archived_batch.unpersist()
+                # pagerank persists its edge/nodes/transition/contribs
+                # frames; this loop re-ranks every N batches for the
+                # stream's lifetime, so release them once the write
+                # (the materializing action) lands — otherwise cached
+                # frames accumulate unboundedly (r11 ADVICE finding)
+                rank_persists: list = []
+                ranks = LG.pagerank(
+                    LG.load_host_graph(spark, link_graph_path),
+                    weight_col="n_links",
+                    persisted=rank_persists,
+                )
+                try:
+                    dst = host_ranks_path.removeprefix("file://")
+                    if os.path.exists(dst):
+                        tmp = dst.rstrip("/") + "_ranks_tmp"
+                        ranks.write.mode("overwrite").parquet(tmp)
+                        swap_directory(spark, dst, tmp)
+                    else:
+                        ranks.write.parquet(dst)
+                finally:
+                    for frame in rank_persists:
+                        frame.unpersist()
+                _crash_point("ranks_swapped")
+        if seen_bloom:
+            # bloom BEFORE corpus (superset invariant): a crash between
+            # the two leaves extra bits — harmless, the maybe-seen rows
+            # re-resolve through the exact check on replay; the reverse
+            # order could leave a landed URL out of the bitmap and
+            # silently re-land it later
+            _bloom(spark).add_df(out.select("norm_url"), "norm_url")
+            _crash_point("bloom_written")
+        _audit("crawl", out)
+        out.write.mode("append").parquet(corpus_path)
+        _crash_point("corpus_appended")
+        if (compact_every and batch_id > 0
+                and batch_id % compact_every == 0
+                and _has_table(corpus_path)):
+            from data_ingestion_tool_bakasura__spark.operators.maintenance import (
+                compact,
+            )
 
-    writer = pages_stream.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+            # layout-only rewrite AFTER the append (a crash here loses
+            # nothing: rows are already durable; the swap restores on
+            # failure). Runs inside foreachBatch, so no reader races
+            # with the swap within this stream.
+            compact(spark, corpus_path.removeprefix("file://"))
+
+    return _start_sink("crawl", pages_stream, _sink, checkpoint, available_now)
+
+
+__all__ = [
+    "IngestConfig",
+    "dedup_against_index",
+    "start_incremental_ingest",
+    "start_streaming_crawl",
+    "start_streaming_image_dedup",
+    "start_streaming_near_dedup",
+    "start_streaming_semantic_dedup",
+    "start_streaming_span_dedup",
+    "start_streaming_upsert",
+    "start_streaming_video_dedup",
+    "stream_documents",
+]

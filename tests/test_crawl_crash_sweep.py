@@ -5,8 +5,9 @@ write, corpus append — whose ORDER is the crash-safety argument
 (reference semantics at stake: the upsert/dedup contract,
 ``db_utils.py:133-170``). The r14 review found ordering bugs one at a
 time; this test enumerates EVERY ordering edge by killing the
-foreachBatch closure at each named point (``pipeline.CRASH_HOOK``),
-replaying, and asserting the full invariant set after every cut:
+foreachBatch closure at each named point (``pipeline.CRASH_HOOK``,
+armed by the ``crash_at`` fixture), replaying, and asserting the full
+invariant set after every cut:
 
 - corpus exactly-once: every crawled URL lands exactly once;
 - archive completeness: every kept page's raw record is published
@@ -64,7 +65,7 @@ _PAGE_C = ("https://site-c.org/r",
 
 @pytest.mark.parametrize("point", POINTS)
 def test_crawl_sink_survives_crash_at_every_ordering_point(
-        spark, tmp_path, point):
+        spark, tmp_path, crash_at, point):
     crawl = tmp_path / "crawl"
     crawl.mkdir()
     corpus = str(tmp_path / "corpus")
@@ -87,16 +88,8 @@ def test_crawl_sink_survives_crash_at_every_ordering_point(
 
     (crawl / "w1.warc").write_bytes(_rec(*_PAGE_A) + _rec(*_PAGE_B))
 
-    def crash(name: str) -> None:
-        if name == point:
-            raise RuntimeError(f"injected crash at {name}")
-
-    SP.CRASH_HOOK = crash
-    try:
-        with pytest.raises(Exception, match="injected crash"):
-            run_once()
-    finally:
-        SP.CRASH_HOOK = None
+    with crash_at(point), pytest.raises(Exception, match="injected crash"):
+        run_once()
     run_once()  # the replay — must complete and repair/skip as designed
 
     # liveness: a later wave lands its new page and dedups its repeat
@@ -136,7 +129,7 @@ def test_crawl_sink_survives_crash_at_every_ordering_point(
 
 
 def test_orphaned_archive_attempt_swept_after_checkpoint_loss(
-        spark, tmp_path):
+        spark, tmp_path, crash_at):
     """r15 hidden-temp audit: a crashed archive attempt leaves
     ``batch-<token>-<id>_tmp``, which BOTH read-back globs
     (``read_warc(archive + "/*")``, ``read_cdx(archive + "/*/*.cdxj")``)
@@ -158,16 +151,9 @@ def test_orphaned_archive_attempt_swept_after_checkpoint_loss(
 
     (crawl / "w1.warc").write_bytes(_rec(*_PAGE_A))
 
-    def crash(name: str) -> None:
-        if name == "archive_tmp_written":
-            raise RuntimeError(f"injected crash at {name}")
-
-    SP.CRASH_HOOK = crash
-    try:
-        with pytest.raises(Exception, match="injected crash"):
-            run_once()
-    finally:
-        SP.CRASH_HOOK = None
+    with crash_at("archive_tmp_written"), \
+            pytest.raises(Exception, match="injected crash"):
+        run_once()
     # the attempt dir is orphaned AND the checkpoint is lost: the next
     # run's fresh token keys its batch dirs differently, so only the
     # stream-start sweep can ever reclaim the orphan

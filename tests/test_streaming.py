@@ -924,6 +924,7 @@ def test_sinks_refuse_remote_paths(spark, tmp_path):
         start_streaming_near_dedup,
     )
 
+    assert {n for n in dir(SP) if n.startswith("start_")} <= set(SP.__all__)
     with _pytest.raises(ValueError, match="local or file://"):
         start_incremental_ingest(None, "s3a://bucket/index")
     with _pytest.raises(ValueError, match="local or file://"):
@@ -1019,7 +1020,7 @@ import pytest as _pt
 @_pt.mark.parametrize(
     "point", ["neardedup_index_written", "neardedup_corpus_appended"])
 def test_streaming_near_dedup_crash_between_writes_loses_nothing(
-        spark, tmp_path, point):
+        spark, tmp_path, crash_at, point):
     """r15 ordering sweep: the LSH closure appends the band index
     BEFORE the corpus (the image/video closures' r9 crash argument,
     adopted here) — a crash at EITHER durable edge replays the batch,
@@ -1046,18 +1047,8 @@ def test_streaming_near_dedup_crash_between_writes_loses_nothing(
         [(1, base), (3, other)], "doc_id long, text string"
     ).coalesce(1).write.mode("append").parquet(landing)
 
-    def crash(name: str) -> None:
-        if name == point:
-            raise RuntimeError(f"injected crash at {name}")
-
-    SP.CRASH_HOOK = crash
-    try:
-        import pytest
-
-        with pytest.raises(Exception, match="injected crash"):
-            run_once()
-    finally:
-        SP.CRASH_HOOK = None
+    with crash_at(point), _pt.raises(Exception, match="injected crash"):
+        run_once()
     run_once()  # replay: corpus lands, index reconciles (no double rows)
 
     # wave 2: a near-dup of doc 1 MUST be caught — under the old
@@ -1081,7 +1072,7 @@ def test_streaming_near_dedup_crash_between_writes_loses_nothing(
 @_pt.mark.parametrize(
     "point", ["imagededup_index_written", "imagededup_corpus_appended"])
 def test_streaming_image_dedup_crash_between_writes_loses_nothing(
-        spark, tmp_path, point):
+        spark, tmp_path, crash_at, point):
     """r15 ordering sweep, image twin of the LSH test: a crash at
     either durable edge replays the batch past the corpus-id guard;
     the index anti-join reconciles without double-indexing and a later
@@ -1103,18 +1094,8 @@ def test_streaming_image_dedup_crash_between_writes_loses_nothing(
         [(1, base)], "media_id long, payload string"
     ).coalesce(1).write.mode("append").parquet(landing)
 
-    def crash(name: str) -> None:
-        if name == point:
-            raise RuntimeError(f"injected crash at {name}")
-
-    SP.CRASH_HOOK = crash
-    try:
-        import pytest
-
-        with pytest.raises(Exception, match="injected crash"):
-            run_once()
-    finally:
-        SP.CRASH_HOOK = None
+    with crash_at(point), _pt.raises(Exception, match="injected crash"):
+        run_once()
     run_once()  # replay reconciles the corpus, no double-indexing
 
     # wave 2: a perturbed twin of image 1 must still be dropped
@@ -1132,7 +1113,7 @@ def test_streaming_image_dedup_crash_between_writes_loses_nothing(
 @_pt.mark.parametrize(
     "point", ["videodedup_index_written", "videodedup_corpus_appended"])
 def test_streaming_video_dedup_crash_between_writes_loses_nothing(
-        spark, tmp_path, point):
+        spark, tmp_path, crash_at, point):
     """r15 ordering sweep, video twin: kill at either durable edge,
     replay, and a later re-cut sharing the landed video's shots is
     still dropped."""
@@ -1154,16 +1135,8 @@ def test_streaming_video_dedup_crash_between_writes_loses_nothing(
         [("a", _vid(F1, F2, F3))], schema
     ).coalesce(1).write.mode("append").parquet(landing)
 
-    def crash(name: str) -> None:
-        if name == point:
-            raise RuntimeError(f"injected crash at {name}")
-
-    SP.CRASH_HOOK = crash
-    try:
-        with _pt.raises(Exception, match="injected crash"):
-            run_once()
-    finally:
-        SP.CRASH_HOOK = None
+    with crash_at(point), _pt.raises(Exception, match="injected crash"):
+        run_once()
     run_once()
 
     # a re-cut of 'a' (2 of 3 shots shared) must still be dropped
@@ -1179,7 +1152,8 @@ def test_streaming_video_dedup_crash_between_writes_loses_nothing(
     assert idx.groupBy("video_id", "fh").count().filter("count > 1").count() == 0
 
 
-def test_streaming_near_dedup_crash_replay_respects_bucket_cap(spark, tmp_path):
+def test_streaming_near_dedup_crash_replay_respects_bucket_cap(
+        spark, tmp_path, crash_at):
     """r15 review (reproduced before fixing): on a replay after a crash
     at neardedup_index_written, the survivors' orphan index rows used to
     count on BOTH sides of the LSH bucket cap — a bucket at exactly
@@ -1206,16 +1180,9 @@ def test_streaming_near_dedup_crash_replay_respects_bucket_cap(spark, tmp_path):
         "doc_id long, text string",
     ).coalesce(1).write.mode("append").parquet(landing)
 
-    def crash(name: str) -> None:
-        if name == "neardedup_index_written":
-            raise RuntimeError(f"injected crash at {name}")
-
-    SP.CRASH_HOOK = crash
-    try:
-        with _pt.raises(Exception, match="injected crash"):
-            run_once()
-    finally:
-        SP.CRASH_HOOK = None
+    with crash_at("neardedup_index_written"), \
+            _pt.raises(Exception, match="injected crash"):
+        run_once()
     run_once()
     got = sorted(r["doc_id"] for r in spark.read.parquet(corpus).collect())
     assert got == [1]  # pre-fix the replay double-counted and landed [1, 2]
@@ -1224,7 +1191,7 @@ def test_streaming_near_dedup_crash_replay_respects_bucket_cap(spark, tmp_path):
 @_pt.mark.parametrize(
     "point", ["semdedup_decisions_appended", "semdedup_index_appended"])
 def test_streaming_semantic_dedup_crash_between_writes_loses_nothing(
-        spark, tmp_path, point):
+        spark, tmp_path, crash_at, point):
     """r15 ADVICE closure: the SemDeDup sink appends decisions FIRST
     (the sink's output must not be lost to an index-first replay
     guard), so a crash between the two appends used to replay the
@@ -1264,16 +1231,8 @@ def test_streaming_semantic_dedup_crash_between_writes_loses_nothing(
         rows1, "vec_id long, embedding array<double>"
     ).coalesce(1).write.mode("append").parquet(landing)
 
-    def crash(name: str) -> None:
-        if name == point:
-            raise RuntimeError(f"injected crash at {name}")
-
-    SP.CRASH_HOOK = crash
-    try:
-        with _pt.raises(Exception, match="injected crash"):
-            run_once()
-    finally:
-        SP.CRASH_HOOK = None
+    with crash_at(point), _pt.raises(Exception, match="injected crash"):
+        run_once()
     run_once()  # replay: decisions reconcile by id, index guard holds
 
     spark.createDataFrame(
@@ -1300,3 +1259,102 @@ def test_streaming_semantic_dedup_crash_between_writes_loses_nothing(
     idx = spark.read.parquet(index)
     assert idx.count() == 4
     assert {r["vec_id"] for r in idx.collect()} == {1, 2, 4, 5}
+
+
+@_pt.mark.parametrize(
+    "point", ["spandedup_cleaned_appended", "spandedup_index_appended"])
+def test_streaming_span_dedup_crash_between_writes_loses_nothing(
+        spark, tmp_path, crash_at, point):
+    """The span sink appends the cleaned docs FIRST and its id-less gram
+    index LAST. A crash at either durable edge replays the batch: the
+    cleaned rows and the gram rows land exactly once, the replay does
+    not cut a doc against its own spans, and the grams a crash before
+    the index append missed are indexed on replay, so a later repeat of
+    a landed span is still cut."""
+    from data_ingestion_tool_bakasura__spark.operators import dedup as DD
+
+    run = "s1 s2 s3 s4 s5"
+    schema = "doc_id long, text string"
+    wave1 = [(1, f"head {run} tail"), (2, "nothing shared at all here")]
+    wave2 = [(3, f"pre {run} post")]
+    landing = str(tmp_path / "landing")
+    cleaned = str(tmp_path / "cleaned")
+    index = str(tmp_path / "index")
+
+    def run_once():
+        SP.start_streaming_span_dedup(
+            SP.stream_documents(
+                spark, landing, spark.read.parquet(landing).schema
+            ),
+            cleaned, index, n=5, checkpoint=str(tmp_path / "ckpt"),
+        ).awaitTermination(120)
+
+    spark.createDataFrame(wave1, schema).coalesce(1)\
+        .write.mode("append").parquet(landing)
+    with crash_at(point), _pt.raises(Exception, match="injected crash"):
+        run_once()
+    run_once()  # replay: guard drops the landed docs, grams reconcile
+
+    got = spark.read.parquet(cleaned)
+    assert got.count() == 2
+    # no self-cut: wave 1's docs are unchanged
+    assert {r["doc_id"]: r["cleaned"] for r in got.collect()} == dict(wave1)
+    idx = spark.read.parquet(index)
+    assert idx.count() == idx.distinct().count()  # each gram exactly once
+    want = DD.span_gram_index(spark.createDataFrame(wave1, schema), n=5)
+    assert {r["gh"] for r in idx.collect()} == {r["gh"] for r in want.collect()}
+
+    spark.createDataFrame(wave2, schema).coalesce(1)\
+        .write.mode("append").parquet(landing)
+    run_once()
+    got = {r["doc_id"]: r["cleaned"]
+           for r in spark.read.parquet(cleaned).collect()}
+    assert got[3] == "pre post"  # wave 1's span, indexed despite the crash
+
+
+def test_incremental_ingest_crash_replay_and_default_trigger(
+        spark, tmp_path, crash_at):
+    """Two more ways to run the ingest sink land exactly the rows of a
+    plain availableNow run: a crash at ingest_appended (rows durable,
+    checkpoint not yet committed) then a replay, where the text-hash
+    anti-join drops every chunk that already landed; and
+    available_now=False, the default trigger, stopped after
+    processAllAvailable()."""
+    docs = load_table(spark, SF_SMOKE, "documents").limit(10)
+    landing = str(tmp_path / "landing")
+    docs.coalesce(1).write.parquet(landing)
+
+    def start(index: str, **kw):
+        return SP.start_incremental_ingest(
+            SP.stream_documents(spark, landing, docs.schema),
+            str(tmp_path / index), cfg=IngestConfig(embedding_dim=8),
+            checkpoint=str(tmp_path / f"{index}_ckpt"), **kw,
+        )
+
+    start("drained").awaitTermination(120)
+    with crash_at("ingest_appended"), \
+            _pt.raises(Exception, match="injected crash"):
+        start("crashed").awaitTermination(120)
+    start("crashed").awaitTermination(120)
+    q = start("continuous", available_now=False)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    want = spark.read.parquet(str(tmp_path / "drained"))
+    assert want.count() > 0
+    for index in ("crashed", "continuous"):
+        got = spark.read.parquet(str(tmp_path / index))
+        assert got.count() == want.count()
+        assert got.exceptAll(want).count() == 0
+
+
+def test_streaming_plan_audit_covers_every_sink(spark):
+    """``tools/plan_audit.audit_streaming`` drives every foreachBatch
+    closure once through BATCH_AUDIT_HOOK: all eight must report (a
+    closure that stops calling ``_audit`` drops out of the count), with
+    no plan anti-pattern findings."""
+    from tools.plan_audit import audit_streaming
+
+    assert audit_streaming(spark, SF_SMOKE) == (8, [])

@@ -750,6 +750,9 @@ class IndexClient:
         the modes that rescore floats from it (exact, pq, binary) carry
         ``keep`` through that one scan, and the others join it once."""
         from data_ingestion_tool_bakasura__spark.operators.similarity import (
+            _centroid_matrix,
+            _probe,
+            _unit,
             binary_topk_indexed,
             cosine_topk,
             ivf_topk,
@@ -769,7 +772,7 @@ class IndexClient:
                 corpus, qv, k=k, id_col="id", vec_col="content_vector", keep=keep
             )
         man = self._serving_manifest(index)
-        short = shortlist or max(4 * k, 50)
+        short = max(4 * k, 50) if shortlist is None else shortlist
         if index == "binary":
             return binary_topk_indexed(
                 self._read_artifact(index, man, "codes"), corpus,
@@ -798,22 +801,16 @@ class IndexClient:
 
             # static partition pruning: the probe list is computable
             # driver-side (query vector + tiny centroid set are both in
-            # hand — same normalize/argsort-stable arithmetic as
-            # ivf_topk's probe UDF), so filter the c_id-partitioned
-            # scan explicitly; Spark's DPP does not fire for the
-            # UDF-derived probe join, so without this the serve path
-            # reads every list (verified in the physical plan)
-            rows = sorted(
-                ((r["c_id"], r["content_vector"])
-                 for r in self._read_artifact(index, man, "centroids").collect()),
-                key=lambda r: r[0],
+            # hand — the same _probe as ivf_topk's probe UDF), so
+            # filter the c_id-partitioned scan explicitly; Spark's DPP
+            # does not fire for the UDF-derived probe join, so without
+            # this the serve path reads every list (verified in the
+            # physical plan)
+            cids, C, Cn = _centroid_matrix(
+                self._read_artifact(index, man, "centroids"), "content_vector"
             )
-            C = np.array([v for _c, v in rows], dtype=np.float64)
-            Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-            q = np.asarray(qv, dtype=np.float64)
-            qn = q / max(float(np.linalg.norm(q)), 1e-300)
-            order = np.argsort(-(Cn @ qn), kind="stable")[: min(nprobe, len(rows))]
-            probed = [rows[i][0] for i in order]
+            order = _probe(_unit(np.asarray([qv], dtype=np.float64)), Cn, nprobe)
+            probed = [cids[i] for i in order[0]]
             assigned = self._read_artifact(index, man, "assigned").filter(
                 F.col("c_id").isin(probed)
             )
@@ -823,7 +820,7 @@ class IndexClient:
             # round differently in the UDF's dgemm and probe a pruned
             # list — r9 ADVICE)
             hits = ivf_topk(
-                assigned, rows,
+                assigned, list(zip(cids, C)),
                 self._query_df(qv), k=k, nprobe=nprobe,
                 corpus_id="id", vec_col="content_vector",
                 probe_lists=probed,

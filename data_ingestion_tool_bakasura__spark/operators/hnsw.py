@@ -64,12 +64,15 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from data_ingestion_tool_bakasura__spark.operators.similarity import (
+    _c,
+    _collect_query_rows,
+    _unit,
+)
+from data_ingestion_tool_bakasura__spark.operators.topk import grouped_topk
 
 
 def _hash_unit(key: str) -> float:
@@ -151,8 +154,7 @@ class LocalHNSW:
 
     # -- build -------------------------------------------------------------
     def fit(self, ids: list, vecs: np.ndarray) -> "LocalHNSW":
-        norms = np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-300)
-        self.vn = (vecs / norms).astype(np.float64)
+        self.vn = _unit(vecs).astype(np.float64)
         self.ids = list(ids)
         order = sorted(range(len(ids)), key=lambda i: (str(ids[i]), i))
         for node in order:
@@ -171,8 +173,7 @@ class LocalHNSW:
         within-wave insertion, (dist, id) tie-breaks)."""
         if not len(ids):
             return self
-        norms = np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-300)
-        add = (vecs / norms).astype(np.float64)
+        add = _unit(vecs).astype(np.float64)
         base = len(self.ids)
         self.vn = add if self.vn is None else np.vstack([self.vn, add])
         self.ids.extend(ids)
@@ -264,7 +265,7 @@ def hnsw_topk(
     :func:`hnsw_topk_indexed` over a parquet roundtrip is what
     test_hnsw pins.
     """
-    q_ids, Q = _collect_queries(queries, query_id, vec_col, "hnsw_topk")
+    q_rows = _collect_query_rows(queries, query_id, vec_col, "hnsw_topk")
 
     src = corpus.select(_c(corpus_id).alias(corpus_id), _c(vec_col).alias(vec_col))
     id_field = src.schema[corpus_id]
@@ -274,22 +275,13 @@ def hnsw_topk(
         f"{corpus_id} {id_field.dataType.simpleString()}, cos_sim double"
     )
 
-    def _answer(index: LocalHNSW, ids: list) -> pd.DataFrame:
-        out_q, out_id, out_s = [], [], []
-        for qi, qv in zip(q_ids, Q):
-            for sim, row in index.search(qv, k, ef_search):
-                out_q.append(qi)
-                out_id.append(ids[row])
-                out_s.append(round(sim, 6))
-        return pd.DataFrame({query_id: out_q, corpus_id: out_id, "cos_sim": out_s})
-
     if n_shards is not None:
 
         def _grouped_build_search(pdf: pd.DataFrame) -> pd.DataFrame:
             ids = pdf[corpus_id].tolist()
             vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             index = LocalHNSW(m=m, ef_construction=ef_construction).fit(ids, vecs)
-            return _answer(index, ids)
+            return _answer(index, q_rows, k, ef_search, query_id, corpus_id)
 
         shard_hits = (
             src.withColumn("_shard", _shard_expr(corpus_id, n_shards))
@@ -310,50 +302,33 @@ def hnsw_topk(
             index = LocalHNSW(m=m, ef_construction=ef_construction).fit(
                 ids, np.vstack(mats)
             )
-            yield _answer(index, ids)
+            yield _answer(index, q_rows, k, ef_search, query_id, corpus_id)
 
         shard_hits = src.mapInPandas(_shard_search, schema=out_schema)
 
-    return _merge_shard_hits(shard_hits, query_id, corpus_id, k)
+    # exact merge of the shard answers: the global per-query top-k
+    order = [F.desc("cos_sim"), F.col(corpus_id)]
+    return grouped_topk(shard_hits, [query_id], order, k).drop("rnk")
+
+
+def _answer(
+    g: LocalHNSW, q_rows: list, k: int, ef_search: int, query_id: str, corpus_id: str
+) -> pd.DataFrame:
+    """One shard's answers: every query's local top-k as (query, id,
+    cos_sim) rows. ``q_rows`` are the driver-collected queries (the
+    guard of ``similarity._collect_query_rows``: beam search ships the
+    query matrix to every task, so it must be bounded)."""
+    hits = [
+        (r["_q"], g.ids[row], round(sim, 6))
+        for r in q_rows
+        for sim, row in g.search(r["_v"], k, ef_search)
+    ]
+    return pd.DataFrame(hits, columns=[query_id, corpus_id, "cos_sim"])
 
 
 # ---------------------------------------------------------------------------
 # persisted shard index (build once, query many) — r7 verdict #4
 # ---------------------------------------------------------------------------
-
-
-def _collect_queries(queries: DataFrame, query_id: str, vec_col: str, who: str):
-    """Driver-side query collect, bounded by the same contract (and the
-    same guard) as the ADC paths: beam search broadcasts the query
-    matrix, so an unbounded query DataFrame must raise with a pointer
-    to the join-based paths, not OOM the driver (r9 verdict #6)."""
-    from data_ingestion_tool_bakasura__spark.operators.similarity import (
-        MAX_DRIVER_QUERIES,
-    )
-
-    q_rows = (
-        queries.select(_c(query_id).alias("q"), _c(vec_col).alias("v"))
-        .limit(MAX_DRIVER_QUERIES + 1)
-        .collect()
-    )
-    if not q_rows:
-        raise ValueError(f"{who}: query set is empty")
-    if len(q_rows) > MAX_DRIVER_QUERIES:
-        raise ValueError(
-            f"{who}: query set exceeds max_queries={MAX_DRIVER_QUERIES}; "
-            "queries are collected driver-side by contract — for unbounded "
-            "query sets use the join-based lsh_ann_topk or cosine_topk_batch"
-        )
-    return [r["q"] for r in q_rows], np.array([r["v"] for r in q_rows], dtype=np.float64)
-
-
-def _merge_shard_hits(shard_hits: DataFrame, query_id: str, corpus_id: str, k: int) -> DataFrame:
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(corpus_id))
-    return (
-        shard_hits.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
 
 
 def _shard_expr(corpus_id: str, n_shards: int) -> Column:
@@ -696,20 +671,16 @@ def hnsw_topk_indexed(
     with the SAME m/ef_construction the caller tuned for; ``ef_search``
     stays a query-time recall dial. Answers are identical to
     ``hnsw_topk(corpus, ..., n_shards=<build n_shards>)``."""
-    q_ids, Q = _collect_queries(queries, query_id, vec_col, "hnsw_topk_indexed")
+    q_rows = _collect_query_rows(queries, query_id, vec_col, "hnsw_topk_indexed")
     id_t = index.schema[corpus_id].dataType.simpleString()
     q_t = queries.schema[query_id].dataType.simpleString()
     out_schema = f"{query_id} {q_t}, {corpus_id} {id_t}, cos_sim double"
 
     def _search(pdf: pd.DataFrame) -> pd.DataFrame:
         g = _graph_from_pdf(pdf, corpus_id)
-        out_q, out_id, out_s = [], [], []
-        for qi, qv in zip(q_ids, Q):
-            for sim, row in g.search(qv, k, ef_search):
-                out_q.append(qi)
-                out_id.append(g.ids[row])
-                out_s.append(round(sim, 6))
-        return pd.DataFrame({query_id: out_q, corpus_id: out_id, "cos_sim": out_s})
+        return _answer(g, q_rows, k, ef_search, query_id, corpus_id)
 
     shard_hits = index.groupBy("shard").applyInPandas(_search, schema=out_schema)
-    return _merge_shard_hits(shard_hits, query_id, corpus_id, k)
+    # exact merge of the shard answers: the global per-query top-k
+    order = [F.desc("cos_sim"), F.col(corpus_id)]
+    return grouped_topk(shard_hits, [query_id], order, k).drop("rnk")

@@ -3,22 +3,40 @@
 The reference configures HNSW on Azure Search (``db_utils.py:93-110``,
 cosine, m=4, efC=400, efS=500) but never issues a vector query
 (``VectorizedQuery`` imported, unused — ``db_utils.py:24``). Here the
-capability is first-class:
+capability is first-class, as seven search families:
 
-- exact brute-force cosine top-k — the correctness baseline. Scan +
-  per-row O(dim) score + TakeOrderedAndProject (map-side partial top-k,
-  so the reduce moves only k rows per partition, not the corpus).
-- LSH-bucketed ANN (random-hyperplane signatures) — the scale path: an
-  equi-join on bucket keys prunes the scan to candidate buckets;
-  multiple hash tables trade recall for scan fraction. Signatures are
-  deterministic (hash-seeded hyperplanes), so results are reproducible.
-- IVF-style variant: assign vectors to the nearest of k seed centroids
-  (deterministic hash-picked seeds), probe the query's nearest
-  ``nprobe`` centroids only.
+- exact brute-force cosine top-k — the correctness baseline
+  (:func:`cosine_topk`, :func:`cosine_topk_batch`); one scan serves any
+  number of queries through a broadcast of the query set.
+- LSH-bucketed ANN (deterministic random-hyperplane signatures,
+  query-side multi-probe): an equi-join on bucket keys prunes the scan
+  to candidate buckets.
+- IVF: vectors assigned to the nearest Lloyd-fitted centroid
+  (:func:`kmeans_centroids`, :func:`ivf_assign`); a query probes its
+  ``nprobe`` nearest lists only.
+- PQ/ADC: 1-byte product-quantization codes per subspace, scored by
+  asymmetric distance against per-query lookup tables, then reranked.
+- IVFADC: IVF probing over PQ codes (raw or residual), then reranked.
+- int8: max-abs quantized cosine shortlist, then reranked.
+- binary: sign-bit Hamming shortlist, then reranked.
 
-At 100 TB the brute-force path is one full scan per query batch —
-usable for offline joins when batched (one scan serves all queries via
-a broadcast of the query set); the LSH/IVF paths bound the scan.
+The families differ only in how they pick candidates. The stages they
+share exist once here:
+
+- the driver-side query guard (:func:`_collect_query_rows`, bounded by
+  :data:`MAX_DRIVER_QUERIES`) for every path whose tables are numpy;
+- the per-query top-k (``operators.topk.grouped_topk``);
+- the IVF probe (:func:`_probe`) over :func:`_centroid_matrix`, with
+  :func:`_unit` as the one row normalization;
+- the ADC score expression (:func:`_adc_score`);
+- the stage-1 cut (:func:`_shortlist`) and the exact float rerank
+  (:func:`_exact_topk`; :func:`_literal_rerank` when the query vectors are
+  a literal) with the rounding and tie-break of
+  :func:`cosine_topk_batch`, which is why every family equals the exact
+  scan at full dials.
+
+At 100 TB the brute-force path is one full scan per query batch; the
+LSH/IVF paths bound the scan and the code families shrink its bytes.
 """
 
 from __future__ import annotations
@@ -26,11 +44,12 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_ingestion_tool_bakasura__spark.functions.vector import cosine_similarity, dot
+from data_ingestion_tool_bakasura__spark.operators.topk import grouped_topk
 
 
 #: driver-collected query sets are bounded BY CONTRACT on the serving
@@ -84,6 +103,105 @@ def double_array_lit(values) -> Column:
     return F.lit(np.asarray(values, dtype=np.float64).ravel())
 
 
+def _unit(V: "np.ndarray") -> "np.ndarray":
+    """``V``'s rows scaled to unit L2 norm; a zero row stays zero."""
+    return V / np.maximum(np.linalg.norm(V, axis=-1, keepdims=True), 1e-300)
+
+
+def _positive(dial: str, value: int) -> int:
+    """A serving dial that selects nothing (``nprobe``/``shortlist`` <
+    1) is a caller error, not an empty answer."""
+    if value < 1:
+        raise ValueError(f"{dial} must be >= 1, got {value}")
+    return value
+
+
+def _centroid_matrix(
+    centroids, vec_col: str = "embedding", centroid_id: str = "c_id", who: str = "ivf"
+) -> tuple[list, "np.ndarray", "np.ndarray"]:
+    """(ids, raw k x dim matrix, unit matrix) of a centroid set in
+    ascending id order — the order every argmax/argsort tiebreak here
+    refers to. ``centroids`` is the (tiny by construction) centroid
+    relation, or its (id, vector) rows already collected."""
+    if isinstance(centroids, DataFrame):
+        centroids = centroids.select(_c(centroid_id), _c(vec_col)).collect()
+    rows = sorted(centroids, key=lambda r: r[0])
+    if not rows:
+        raise ValueError(f"{who}: centroid set is empty")
+    C = np.array([r[1] for r in rows], dtype=np.float64)
+    return [r[0] for r in rows], C, _unit(C)
+
+
+def _probe(Qn: "np.ndarray", Cn: "np.ndarray", nprobe: int) -> "np.ndarray":
+    """The IVF probe: per unit query row, the positions in the
+    id-sorted centroid matrix of its ``nprobe`` most similar centroids.
+    Every probe (the ``ivf_topk`` UDF, ``ivfadc_topk``, the serving
+    path's static pruning) runs this one arithmetic, so they agree."""
+    sims = Qn @ Cn.T  # n x k_lists
+    # argsort on (-sim, index): stable lowest-c_id tiebreak
+    return np.argsort(-sims, axis=1, kind="stable")[:, : _positive("nprobe", nprobe)]
+
+
+def _shortlist(scored: DataFrame, query: str, order: list, shortlist: int) -> DataFrame:
+    """Stage 1 of every two-stage family: each query's ``shortlist``
+    best candidates by the family's approximate score."""
+    n = _positive("shortlist", shortlist)
+    return grouped_topk(scored, [query], order, n, rank_col="_r1")
+
+
+def _exact_topk(
+    cand: DataFrame,
+    qid: Column,
+    qvec: Column,
+    k: int,
+    corpus_id: str,
+    query_id: str,
+    vec_col: str,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The exact float stage every family ends in: cosine of each
+    (query, candidate) row of ``cand``, rounded to 6 places, then the
+    per-query top-k by (cos_sim desc, corpus id) — the rounding and
+    tiebreak of :func:`cosine_topk_batch`, so a family whose candidates
+    cover the true top-k returns the exact scan's rows."""
+    scored = cand.select(
+        qid.alias(query_id),
+        _c(corpus_id).alias(corpus_id),
+        *keep,
+        F.round(cosine_similarity(_c(vec_col), qvec), 6).alias("cos_sim"),
+    )
+    order = [F.desc("cos_sim"), F.col(corpus_id)]
+    return grouped_topk(scored, [query_id], order, k).drop("rnk")
+
+
+def _literal_rerank(
+    corpus: DataFrame,
+    short: DataFrame,
+    queries: DataFrame,
+    q_rows: list,
+    k: int,
+    corpus_id: str,
+    query_id: str,
+    vec_col: str,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """:func:`_exact_topk` for the driver-collected query paths: ``short``
+    holds (corpus id, ``_qi``) pairs, ``_qi`` the position in
+    ``q_rows``; ``corpus`` is touched only for those ids (broadcast
+    join), and the query ids and vectors are literals indexed by
+    ``_qi`` — no query relation joins the plan."""
+    q_type = queries.select(_c(query_id)).schema.fields[0].dataType
+    qids = F.array(*[F.lit(r["_q"]) for r in q_rows]).cast(T.ArrayType(q_type))
+    Q = np.array([r["_v"] for r in q_rows], dtype=np.float64)
+    dim = Q.shape[1]
+    qvec = F.slice(double_array_lit(Q), F.col("_qi") * dim + 1, dim)
+    return _exact_topk(
+        corpus.join(F.broadcast(short), on=corpus_id),
+        F.element_at(qids, F.col("_qi") + 1), qvec,
+        k, corpus_id, query_id, vec_col, keep,
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     query_vec: list[float],
@@ -130,16 +248,9 @@ def cosine_topk_batch(
     q = F.broadcast(
         queries.select(_c(query_id).alias("_qid"), _c(vec_col).alias("_qvec"))
     )
-    scored = corpus.crossJoin(q).select(
-        F.col("_qid").alias(query_id),
-        _c(corpus_id).alias(corpus_id),
-        F.round(cosine_similarity(_c(vec_col), F.col("_qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), _c(corpus_id))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
+    return _exact_topk(
+        corpus.crossJoin(q), F.col("_qid"), F.col("_qvec"),
+        k, corpus_id, query_id, vec_col,
     )
 
 
@@ -317,12 +428,8 @@ def lsh_ann_topk_indexed(
         F.round(cosine_similarity(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
     )
     scored = cand.groupBy(query_id, corpus_id).agg(F.first("cos_sim").alias("cos_sim"))
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(corpus_id))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
-    )
+    order = [F.desc("cos_sim"), F.col(corpus_id)]
+    return grouped_topk(scored, [query_id], order, k).drop("rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -355,20 +462,11 @@ def ivf_assign(
     The previous form (crossJoin + row_number window) shuffled n*k rows
     on corpus_id — a plan that dies at 100 TB; assignment is a per-row
     map and should cost exactly one corpus scan."""
-    rows = sorted(
-        centroids.select(_c(centroid_id).alias("c"), _c(vec_col).alias("v")).collect(),
-        key=lambda r: r["c"],
-    )
-    if not rows:
-        raise ValueError("ivf_assign: centroid set is empty")
-    cids = [r["c"] for r in rows]
-    C = np.array([r["v"] for r in rows], dtype=np.float64)  # k x dim
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
+    cids, _C, Cn = _centroid_matrix(centroids, vec_col, centroid_id, "ivf_assign")
 
     @F.pandas_udf(centroids.schema[centroid_id].dataType)
     def _assign(vecs: pd.Series) -> pd.Series:
-        V = np.array(vecs.tolist(), dtype=np.float64)
-        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
+        Vn = _unit(np.array(vecs.tolist(), dtype=np.float64))
         sims = Vn @ Cn.T  # n x k; argmax takes the FIRST max -> lowest c_id on ties
         if round_dp is not None:
             sims = np.round(sims, round_dp)
@@ -470,7 +568,7 @@ def maxmin_seed_centroids(
     ids, V = _md5_sample(corpus, id_col, vec_col, sample_cap)
     if not ids:
         raise ValueError("maxmin_seed_centroids: corpus is empty")
-    Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
+    Vn = _unit(V)
     chosen = _maxmin_greedy(ids, Vn, n)
     spark = corpus.sparkSession
     # preserve the id column's original type (ADVICE r6: int() coercion
@@ -527,7 +625,7 @@ def kmeans_centroids(
     )
     if not ids:
         raise ValueError("kmeans_centroids: corpus is empty")
-    Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
+    Vn = _unit(V)
     if init == "maxmin":
         chosen = _maxmin_greedy(ids, Vn, n)
     else:
@@ -537,7 +635,7 @@ def kmeans_centroids(
     cids = [ids[i] for i in chosen]
     C = V[chosen].copy()
     for _ in range(iters):
-        Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
+        Cn = _unit(C)
         a = np.argmax(Vn @ Cn.T, axis=1)  # first max -> lowest c_id
         for j in range(len(cids)):
             mask = a == j
@@ -584,12 +682,7 @@ def ivf_topk(
     ``centroids`` is the centroid relation, or its rows already
     collected as (centroid id, vector) pairs — the serving path
     collects them once to compute ``probe_lists`` and passes them on."""
-    if isinstance(centroids, DataFrame):
-        centroids = centroids.select(_c(centroid_id), _c(vec_col)).collect()
-    rows = sorted(centroids, key=lambda r: r[0])
-    if not rows:
-        raise ValueError("ivf_topk: centroid set is empty")
-    cids = [r[0] for r in rows]
+    cids, _C, Cn = _centroid_matrix(centroids, vec_col, centroid_id, "ivf_topk")
     if probe_lists is not None:
         unknown = set(probe_lists) - set(cids)
         if unknown:
@@ -598,22 +691,17 @@ def ivf_topk(
             F.array(*[F.lit(c) for c in probe_lists]).cast("array<long>")
         )
     else:
-        C = np.array([r[1] for r in rows], dtype=np.float64)
-        Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-        np_eff = min(nprobe, len(cids))
+        nprobe = _positive("nprobe", nprobe)  # at plan time, not in a worker
 
         def _probe_fn(vecs):
             V = np.array(vecs.tolist(), dtype=np.float64)
             if not len(V):
                 return pd.Series([], dtype=object)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-            sims = Vn @ Cn.T  # n x k_lists
-            # argsort on (-sim, index): stable lowest-c_id tiebreak
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :np_eff]
+            order = _probe(_unit(V), Cn, nprobe)
             return pd.Series([[cids[i] for i in row] for row in order])
 
-        _probe = F.pandas_udf(_probe_fn, T.ArrayType(T.LongType()))
-        probe_col = F.explode(_probe(_c(vec_col)))
+        probe_udf = F.pandas_udf(_probe_fn, T.ArrayType(T.LongType()))
+        probe_col = F.explode(probe_udf(_c(vec_col)))
 
     q_probed = queries.select(
         _c(query_id).alias(query_id),
@@ -621,16 +709,8 @@ def ivf_topk(
         probe_col.alias(centroid_id),
     )
     cand = assigned.join(F.broadcast(q_probed), on=centroid_id)
-    scored = cand.select(
-        query_id,
-        F.col(corpus_id),
-        F.round(cosine_similarity(F.col(vec_col), F.col("_qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(corpus_id))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
+    return _exact_topk(
+        cand, F.col(query_id), F.col("_qvec"), k, corpus_id, query_id, vec_col
     )
 
 
@@ -660,26 +740,25 @@ def pq_train(
     init per subspace, fixed Lloyd iterations, empty clusters keep
     their previous centroid.
     """
-    if n_codes > 128:
-        raise ValueError("n_codes > 128 does not fit the tinyint code column")
     _ids, V = sample if sample is not None else _md5_sample(
         corpus, id_col, vec_col, sample_cap
     )
     if not _ids:
         raise ValueError("pq_train: corpus is empty")
-    if V.shape[1] % m:
-        raise ValueError(f"dim {V.shape[1]} not divisible by m={m}")
-    Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-    return corpus.sparkSession.createDataFrame(
-        _fit_pq_codebooks(Vn, m, n_codes, iters),
-        "subspace int, code int, centroid array<double>",
-    )
+    return _fit_pq_codebooks(corpus.sparkSession, _unit(V), m, n_codes, iters)
 
 
-def _fit_pq_codebooks(X_all: "np.ndarray", m: int, n_codes: int, iters: int):
-    """Per-subspace k-means over a driver-side sample matrix:
-    farthest-first init + Lloyd, deterministic; returns the codebook
-    relation rows (subspace, code, centroid)."""
+def _fit_pq_codebooks(
+    spark, X_all: "np.ndarray", m: int, n_codes: int, iters: int
+) -> DataFrame:
+    """Per-subspace k-means over a driver-side sample matrix (unit
+    vectors, or their IVF residuals — :func:`_residual`): farthest-first
+    init + Lloyd, deterministic; returns the codebook relation
+    (subspace, code, centroid)."""
+    if n_codes > 128:
+        raise ValueError("n_codes > 128 does not fit the tinyint code column")
+    if X_all.shape[1] % m:
+        raise ValueError(f"dim {X_all.shape[1]} not divisible by m={m}")
     sub = X_all.shape[1] // m
     out = []
     for j in range(m):
@@ -706,51 +785,25 @@ def _fit_pq_codebooks(X_all: "np.ndarray", m: int, n_codes: int, iters: int):
         out.extend(
             (j, c, [float(x) for x in C[c]]) for c in range(len(C))
         )
-    return out
+    return spark.createDataFrame(out, "subspace int, code int, centroid array<double>")
 
 
-def pq_train_residual(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    m: int = 8,
-    n_codes: int = 32,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_cap: int = 8192,
-    sample: tuple[list, "np.ndarray"] | None = None,
-) -> DataFrame:
-    """Residual PQ codebooks — the classic IVFADC fine quantizer
-    (TPAMI'11 §V): codes quantize r = x_norm - centroid(assigned(x))
-    instead of x_norm. Residuals are centered near zero with far
-    smaller spread than raw vectors, so the same code budget buys a
-    finer grid exactly where the probed list's vectors live; measured
-    recall deltas in ANN.md. Same bounded-sample, deterministic
-    training contract as :func:`pq_train` (and the same optional
-    precollected ``sample`` shared-scan path)."""
-    if n_codes > 128:
-        raise ValueError("n_codes > 128 does not fit the tinyint code column")
-    _ids, V = sample if sample is not None else _md5_sample(
-        corpus, id_col, vec_col, sample_cap
-    )
-    if not _ids:
-        raise ValueError("pq_train_residual: corpus is empty")
-    if V.shape[1] % m:
-        raise ValueError(f"dim {V.shape[1]} not divisible by m={m}")
-    Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-    c_rows = sorted(centroids.collect(), key=lambda r: r["c_id"])
-    CC = np.array([r[vec_col] for r in c_rows], dtype=np.float64)
-    CCn = CC / np.maximum(np.linalg.norm(CC, axis=1, keepdims=True), 1e-300)
-    assign = np.argmax(Vn @ CCn.T, axis=1)  # same tiebreak as ivf_assign
-    # residual against the RAW centroid (the reconstruction anchor —
-    # the list mean), not the normalized direction used for the argmax:
+def _residual(Vn: "np.ndarray", cents: tuple) -> "np.ndarray":
+    """Residual PQ input — the classic IVFADC fine quantizer
+    (TPAMI'11 §V): each unit row minus the centroid of its IVF list.
+    Residuals are centered near zero with far smaller spread than raw
+    vectors, so the same code budget buys a finer grid exactly where
+    the probed list's vectors live; measured recall deltas in ANN.md.
+    ``cents`` is a :func:`_centroid_matrix`; the assignment reproduces
+    :func:`ivf_assign` exactly (same normalization, same first-max
+    tiebreak), so codes and list placement always agree."""
+    _cids, C, Cn = cents
+    # argmax on the normalized direction (= ivf_assign), residual
+    # against the RAW centroid (the reconstruction anchor — the list
+    # mean), not the normalized direction used for the argmax:
     # subtracting the unit vector adds a radial error component that
     # inflates |r| (measured: it erases the residual-PQ gain entirely)
-    R = Vn - CC[assign]
-    return corpus.sparkSession.createDataFrame(
-        _fit_pq_codebooks(R, m, n_codes, iters),
-        "subspace int, code int, centroid array<double>",
-    )
+    return Vn - C[np.argmax(Vn @ Cn.T, axis=1)]
 
 
 def _pq_codebook_np(codebooks: DataFrame) -> "np.ndarray":
@@ -767,18 +820,10 @@ def _pq_codebook_np(codebooks: DataFrame) -> "np.ndarray":
     return C
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: DataFrame,
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Encode vectors to ``m`` one-byte codes (array<tinyint>): per
-    subspace, the L2-nearest codebook centroid of the NORMALIZED
-    vector. 64-d float32 -> 8 bytes is 32x compression (vs 4x for the
-    int8 path) — the difference between executor-resident candidate
-    lists and spill at 100 TB of vectors. One Arrow matmul per
-    (subspace, batch); map-only, no shuffle."""
+def _pq_encoder(codebooks: DataFrame, cents: tuple | None = None):
+    """The PQ encode kernel, an Arrow UDF over a vector column: per
+    subspace, the L2-nearest codebook centroid of the unit vector — or,
+    given ``cents``, of its IVF residual (:func:`_residual`)."""
     C = _pq_codebook_np(codebooks)
     m, n, sub = C.shape
     Cf = np.where(np.isfinite(C), C, 0.0)
@@ -792,14 +837,59 @@ def pq_encode(
         V = np.array(vecs.tolist(), dtype=np.float64)
         if not len(V):
             return pd.Series([], dtype=object)
-        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
+        X = _unit(V) if cents is None else _residual(_unit(V), cents)
         codes = np.empty((len(V), m), dtype=np.int8)
         for j in range(m):
-            X = Vn[:, j * sub : (j + 1) * sub]
-            codes[:, j] = np.argmax(X @ Cf[j].T + bias[j], axis=1)
+            Xj = X[:, j * sub : (j + 1) * sub]
+            codes[:, j] = np.argmax(Xj @ Cf[j].T + bias[j], axis=1)
         return pd.Series([c.tolist() for c in codes])
 
-    return corpus.withColumn(code_col, _enc(_c(vec_col)))
+    return _enc
+
+
+def pq_encode(
+    corpus: DataFrame,
+    codebooks: DataFrame,
+    vec_col: str = "embedding",
+    code_col: str = "pq_code",
+) -> DataFrame:
+    """Encode vectors to ``m`` one-byte codes (array<tinyint>): per
+    subspace, the L2-nearest codebook centroid of the NORMALIZED
+    vector. 64-d float32 -> 8 bytes is 32x compression (vs 4x for the
+    int8 path) — the difference between executor-resident candidate
+    lists and spill at 100 TB of vectors. One Arrow matmul per
+    (subspace, batch); map-only, no shuffle."""
+    return corpus.withColumn(code_col, _pq_encoder(codebooks)(_c(vec_col)))
+
+
+def _adc_score(codebooks: DataFrame, Qn: "np.ndarray", code: Column):
+    """The ADC score (asymmetric distance computation) as a function of
+    a query position ``q`` (int Column): each query's per-subspace
+    lookup table LUT[j][c] = q_sub_j . centroid_{j,c} (query NOT
+    quantized — the asymmetry that halves PQ error), and a code row's
+    approximate cosine is m table adds instead of dim multiplies. The
+    tables of all of ``Qn``'s queries are ONE ``array<double>``
+    literal, and the score is one codegen expression per code row (an
+    ``aggregate`` over ``element_at`` into it, summing left to right)
+    — no Python worker."""
+    C = _pq_codebook_np(codebooks)
+    mm, nn, sub = C.shape
+    Cf = np.where(np.isfinite(C), C, 0.0)
+    # LUT[q, j, c] = q_sub_j . centroid_{j,c}; flattened q-major, so
+    # query q, subspace j, code c sits at 1 + q*mm*nn + j*nn + c
+    lut = double_array_lit(np.einsum("qjs,jcs->qjc", Qn.reshape(len(Qn), mm, sub), Cf))
+
+    def score(q: Column) -> Column:
+        return F.aggregate(
+            F.sequence(F.lit(0), F.lit(mm - 1)),
+            F.lit(0.0),
+            lambda acc, j: acc + F.element_at(
+                lut,
+                q * (mm * nn) + j * nn + F.element_at(code, j + 1).cast("int") + 1,
+            ),
+        )
+
+    return score
 
 
 def pq_adc_rerank_topk(
@@ -858,16 +948,11 @@ def pq_adc_topk_indexed(
     """PQ top-k over STORED codes (``codes``: the (id, code) output of
     :func:`pq_encode`): ADC shortlist + exact float rerank.
 
-    Stage 1 (ADC, asymmetric distance computation): each query builds a
-    per-subspace lookup table LUT[j][c] = q_sub_j . centroid_{j,c}
-    (query NOT quantized — the asymmetry that halves PQ error), and a
-    vector's approximate cosine is m table adds instead of dim
-    multiplies. The tables of all queries are ONE ``array<double>``
-    literal, and the score is one codegen expression per code row (an
-    ``aggregate`` over ``element_at`` into it) — no Python worker, no
-    join against the query side. The per-query ``shortlist`` is a
-    window top-n (ties on the corpus id). Stage 2 reranks it in exact
-    float cosine with the identical rounding + tiebreak as
+    Stage 1 scores every code row against every query with
+    :func:`_adc_score` (one ``posexplode`` of the per-query scores, no
+    join against the query side) and keeps each query's ``shortlist``
+    (ties on the corpus id). Stage 2 (:func:`_literal_rerank`) reranks
+    it in exact float cosine with the identical rounding + tiebreak as
     :func:`cosine_topk_batch`, touching ``corpus`` vectors ONLY for the
     shortlist ids (broadcast join); the query vectors are a literal
     too. ``keep`` names corpus columns carried into the result.
@@ -875,99 +960,21 @@ def pq_adc_topk_indexed(
     Queries are collected driver-side (the LUT is numpy), bounded by
     :data:`MAX_DRIVER_QUERIES`.
     """
-    C = _pq_codebook_np(codebooks)
-    mm, nn, sub = C.shape
-    Cf = np.where(np.isfinite(C), C, 0.0)
     q_rows = _collect_query_rows(queries, query_id, vec_col, "pq_adc_topk_indexed")
-    nq = len(q_rows)
-    Q = np.array([r["_v"] for r in q_rows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    # LUT[q, j, c] = q_sub_j . centroid_{j,c}; flattened q-major, so
-    # query q, subspace j, code c sits at 1 + q*mm*nn + j*nn + c
-    lut = double_array_lit(np.einsum("qjs,jcs->qjc", Qn.reshape(nq, mm, sub), Cf))
-    code = _c(code_col)
-
-    def _adc(q):
-        return F.aggregate(
-            F.sequence(F.lit(0), F.lit(mm - 1)),
-            F.lit(0.0),
-            lambda acc, j: acc + F.element_at(
-                lut,
-                q * (mm * nn) + j * nn + F.element_at(code, j + 1).cast("int") + 1,
-            ),
-        )
-
+    Qn = _unit(np.array([r["_v"] for r in q_rows], dtype=np.float64))
+    adc = _adc_score(codebooks, Qn, _c(code_col))
     scored = codes.select(
         _c(corpus_id).alias(corpus_id),
         F.posexplode(
-            F.transform(F.sequence(F.lit(0), F.lit(nq - 1)), _adc)
+            F.transform(F.sequence(F.lit(0), F.lit(len(q_rows) - 1)), adc)
         ).alias("_qi", "_adc"),
     )
-    w1 = Window.partitionBy("_qi").orderBy(F.desc("_adc"), _c(corpus_id))
-    short = (
-        scored.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= shortlist)
-        .select(corpus_id, "_qi")
+    short = _shortlist(
+        scored, "_qi", [F.desc("_adc"), _c(corpus_id)], shortlist
+    ).select(corpus_id, "_qi")
+    return _literal_rerank(
+        corpus, short, queries, q_rows, k, corpus_id, query_id, vec_col, keep
     )
-    q_type = queries.select(_c(query_id)).schema.fields[0].dataType
-    qids = F.array(*[F.lit(r["_q"]) for r in q_rows]).cast(T.ArrayType(q_type))
-    dim = Q.shape[1]
-    qvec = F.slice(double_array_lit(Q), F.col("_qi") * dim + 1, dim)
-    rer = (
-        corpus.join(F.broadcast(short), on=corpus_id)
-        .select(
-            F.element_at(qids, F.col("_qi") + 1).alias(query_id),
-            _c(corpus_id).alias(corpus_id),
-            *keep,
-            F.round(cosine_similarity(_c(vec_col), qvec), 6).alias("cos_sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), _c(corpus_id))
-    return (
-        rer.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
-    )
-
-
-def pq_encode_residual(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    codebooks: DataFrame,
-    vec_col: str = "embedding",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Encode each vector's IVF residual (x_norm - its nearest
-    centroid) to ``m`` one-byte codes against residual codebooks
-    (:func:`pq_train_residual`). The internal assignment reproduces
-    :func:`ivf_assign` exactly (same normalization, same first-max
-    tiebreak), so codes and list placement always agree. Map-only."""
-    C = _pq_codebook_np(codebooks)
-    m, n, sub = C.shape
-    Cf = np.where(np.isfinite(C), C, 0.0)
-    bias = np.where(
-        np.isfinite(C).all(axis=2), -0.5 * (Cf * Cf).sum(axis=2), -np.inf
-    )
-    c_rows = sorted(centroids.collect(), key=lambda r: r["c_id"])
-    CC = np.array([r[vec_col] for r in c_rows], dtype=np.float64)
-    CCn = CC / np.maximum(np.linalg.norm(CC, axis=1, keepdims=True), 1e-300)
-
-    @F.pandas_udf(T.ArrayType(T.ByteType()))
-    def _enc(vecs: pd.Series) -> pd.Series:
-        V = np.array(vecs.tolist(), dtype=np.float64)
-        if not len(V):
-            return pd.Series([], dtype=object)
-        Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-300)
-        # argmax on the normalized direction (= ivf_assign), residual
-        # against the raw centroid (see pq_train_residual)
-        R = Vn - CC[np.argmax(Vn @ CCn.T, axis=1)]
-        codes = np.empty((len(V), m), dtype=np.int8)
-        for j in range(m):
-            X = R[:, j * sub : (j + 1) * sub]
-            codes[:, j] = np.argmax(X @ Cf[j].T + bias[j], axis=1)
-        return pd.Series([c.tolist() for c in codes])
-
-    return corpus.withColumn(code_col, _enc(_c(vec_col)))
 
 
 def ivfadc_topk(
@@ -993,23 +1000,24 @@ def ivfadc_topk(
 
     1. coarse: :func:`kmeans_centroids` + :func:`ivf_assign` put every
        vector in one of ``n_lists`` lists; a query touches only its
-       ``nprobe`` nearest lists (scan fraction ~ nprobe/n_lists with
-       fitted centroids — measured in ANN.md).
-    2. fine: candidates in probed lists are ranked by PQ-ADC over
-       8-byte codes — the probed lists can stay executor-resident at
-       100 TB because they are 32x smaller than the floats. With
+       ``nprobe`` nearest lists (:func:`_probe`; scan fraction ~
+       nprobe/n_lists with fitted centroids — measured in ANN.md).
+    2. fine: candidates in probed lists are ranked by the PQ-ADC
+       expression of :func:`pq_adc_topk_indexed` (:func:`_adc_score`)
+       over 8-byte codes — the probed lists can stay executor-resident
+       at 100 TB because they are 32x smaller than the floats. With
        ``residual=True`` (classic IVFADC) the codes quantize
        r = x_norm - centroid(list) instead of x_norm
-       (:func:`pq_train_residual`/:func:`pq_encode_residual`): the ADC
-       score becomes q·centroid (a per-(query, probed-list) scalar
-       attached to the broadcast probe pairs) + the same LUT sum over
-       the residual codes — identical plan shape, finer grid where the
-       list's vectors actually live (measured recall deltas in
-       ANN.md). ``residual=False`` keeps codebooks list-independent
-       and reusable by the flat :func:`pq_adc_rerank_topk`.
+       (:func:`_residual`): the ADC score becomes q·centroid (a
+       per-(query, probed-list) scalar attached to the broadcast probe
+       pairs) + the same LUT sum over the residual codes — identical
+       plan shape, finer grid where the list's vectors actually live
+       (measured recall deltas in ANN.md). ``residual=False`` keeps
+       codebooks list-independent and reusable by the flat
+       :func:`pq_adc_rerank_topk`.
     3. exact: the per-query ``shortlist`` is reranked in float cosine
-       with :func:`cosine_topk_batch`'s rounding + tiebreak, so at
-       full probe with a generous shortlist the result EQUALS the
+       by :func:`pq_adc_topk_indexed`'s stage 2 (:func:`_literal_rerank`),
+       so at full probe with a generous shortlist the result EQUALS the
        exact scan for ANY centroid/codebook set — the oracle contract
        (tested; q_ivfadc_search).
 
@@ -1017,6 +1025,7 @@ def ivfadc_topk(
     candidate exchange carries (corpus_id, query, adc_score) scalars;
     floats are re-read only for shortlist ids via broadcast semi-join.
     """
+    spark = corpus.sparkSession
     # one md5 fit sample, shared by the coarse k-means AND the PQ
     # codebooks (they trained on the identical TakeOrdered scan anyway
     # — collecting it twice was a pure duplicate driver job, §1.2)
@@ -1029,98 +1038,45 @@ def ivfadc_topk(
         centroids = kmeans_centroids(corpus, n_lists, iters=iters,
                                      id_col=corpus_id, vec_col=vec_col,
                                      sample=fit_sample)
+    cents = _centroid_matrix(centroids, vec_col, who="ivfadc_topk")
+    cids, C, Cn = cents
     if codebooks is None:
-        if residual:
-            codebooks = pq_train_residual(corpus, centroids, m=m,
-                                          n_codes=n_codes, iters=iters,
-                                          id_col=corpus_id, vec_col=vec_col,
-                                          sample=fit_sample)
-        else:
-            codebooks = pq_train(corpus, m=m, n_codes=n_codes, iters=iters,
-                                 id_col=corpus_id, vec_col=vec_col,
-                                 sample=fit_sample)
-    assigned = ivf_assign(corpus, centroids, corpus_id, vec_col, "c_id")
-    if residual:
-        encoded = pq_encode_residual(assigned, centroids, codebooks, vec_col).select(
-            corpus_id, "c_id", "pq_code"
+        X = _unit(fit_sample[1])
+        codebooks = _fit_pq_codebooks(
+            spark, _residual(X, cents) if residual else X, m, n_codes, iters
         )
-    else:
-        encoded = pq_encode(assigned, codebooks, vec_col).select(
-            corpus_id, "c_id", "pq_code"
-        )
+    encode = _pq_encoder(codebooks, cents if residual else None)
+    encoded = ivf_assign(corpus, centroids, corpus_id, vec_col, "c_id").select(
+        corpus_id, "c_id", encode(_c(vec_col)).alias("pq_code")
+    )
 
-    C = _pq_codebook_np(codebooks)
-    mm, nn, sub = C.shape
-    Cf = np.where(np.isfinite(C), C, 0.0)
     q_rows = _collect_query_rows(queries, query_id, vec_col, "ivfadc_topk")
-    qids = [r["_q"] for r in q_rows]
-    qpos = {q: i for i, q in enumerate(qids)}
-    Q = np.array([r["_v"] for r in q_rows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-    LUT = np.einsum("qjs,jcs->qjc", Qn.reshape(len(Q), mm, sub), Cf)
-
-    # probe: nearest nprobe centroid lists per query (same math as ivf_topk)
-    c_rows = sorted(centroids.collect(), key=lambda r: r["c_id"])
-    cids = [r["c_id"] for r in c_rows]
-    CC = np.array([r[vec_col] for r in c_rows], dtype=np.float64)
-    CCn = CC / np.maximum(np.linalg.norm(CC, axis=1, keepdims=True), 1e-300)
-    np_eff = min(nprobe, len(cids))
-    sims = Qn @ CCn.T
-    order = np.argsort(-sims, axis=1, kind="stable")[:, :np_eff]
-    spark = corpus.sparkSession
+    Qn = _unit(np.array([r["_v"] for r in q_rows], dtype=np.float64))
+    order = _probe(Qn, Cn, nprobe)
     # residual scoring: q.x_norm = q.raw_centroid(list) + q.residual,
     # so the exact first term rides the (tiny) broadcast probe pairs as
     # `_bias` (raw centroid — the residual's reconstruction anchor;
     # probe ORDER still uses the normalized direction, = ivf_topk)
-    sims_raw = Qn @ CC.T
+    bias = Qn @ C.T if residual else np.zeros((len(q_rows), len(cids)))
     probes = F.broadcast(
         spark.createDataFrame(
             [
-                (q, int(cids[c]), float(sims_raw[qi, c]) if residual else 0.0)
-                for qi, q in enumerate(qids)
+                (qi, int(cids[c]), float(bias[qi, c]))
+                for qi in range(len(q_rows))
                 for c in order[qi]
-            ]
-        ).toDF(query_id, "c_id", "_bias")
-    )
-
-    @F.pandas_udf(T.DoubleType())
-    def _adc(qs: pd.Series, codes: pd.Series) -> pd.Series:
-        if not len(qs):
-            return pd.Series([], dtype=float)
-        qi = qs.map(qpos).to_numpy(dtype=np.int64)
-        Cd = np.array(codes.tolist(), dtype=np.int64)  # n x m
-        return pd.Series(LUT[qi[:, None], np.arange(mm)[None, :], Cd].sum(axis=1))
-
-    cand = encoded.join(probes, on="c_id").select(
-        query_id,
-        corpus_id,
-        (_adc(_c(query_id), F.col("pq_code")) + F.col("_bias")).alias("_adc"),
-    )
-    w1 = Window.partitionBy(query_id).orderBy(F.desc("_adc"), _c(corpus_id))
-    short = (
-        cand.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= shortlist)
-        .select(query_id, corpus_id)
-    )
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            [(q, [float(x) for x in Q[i]]) for i, q in enumerate(qids)]
-        ).toDF(query_id, "_qvec")
-    )
-    rer = (
-        corpus.join(F.broadcast(short), on=corpus_id)
-        .join(qdf, on=query_id)
-        .select(
-            query_id,
-            corpus_id,
-            F.round(cosine_similarity(_c(vec_col), F.col("_qvec")), 6).alias("cos_sim"),
+            ],
+            "_qi int, c_id long, _bias double",
         )
     )
-    w2 = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), _c(corpus_id))
-    return (
-        rer.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
+    adc = _adc_score(codebooks, Qn, F.col("pq_code"))
+    cand = encoded.join(probes, on="c_id").select(
+        corpus_id, "_qi", (adc(F.col("_qi")) + F.col("_bias")).alias("_adc")
+    )
+    short = _shortlist(
+        cand, "_qi", [F.desc("_adc"), _c(corpus_id)], shortlist
+    ).select(corpus_id, "_qi")
+    return _literal_rerank(
+        corpus, short, queries, q_rows, k, corpus_id, query_id, vec_col
     )
 
 
@@ -1196,21 +1152,11 @@ def quantized_rerank_topk(
         F.col("_qz_qvec"),
         cosine_similarity(F.col("_qz_emb"), F.col("_qz_qvec")).alias("_qz_qcos"),
     )
-    w1 = Window.partitionBy(query_id).orderBy(F.desc("_qz_qcos"), _c(corpus_id))
-    short = (
-        scored.withColumn("_qz_r1", F.row_number().over(w1))
-        .filter(F.col("_qz_r1") <= shortlist)
+    short = _shortlist(
+        scored, query_id, [F.desc("_qz_qcos"), _c(corpus_id)], shortlist
     )
-    rer = short.select(
-        query_id,
-        corpus_id,
-        F.round(cosine_similarity(_c(vec_col), F.col("_qz_qvec")), 6).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), _c(corpus_id))
-    return (
-        rer.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
+    return _exact_topk(
+        short, F.col(query_id), F.col("_qz_qvec"), k, corpus_id, query_id, vec_col
     )
 
 
@@ -1293,43 +1239,16 @@ def binary_rerank_topk(
     pipeline — sign-disagreement Hamming, identical tie-breaks —
     rather than assuming exactness.
 
-    Same scale contract as the siblings: one corpus scan regardless of
-    query count, broadcast queries, per-query window top-k with
-    map-side partial rank in both stages. ``_bq_``-prefixed internal
+    The inline composition: :func:`binary_quantize` codes the corpus on
+    the fly and :func:`binary_topk_indexed` runs the same two stages
+    the serving path runs over codes persisted at build time (as
+    :func:`pq_adc_rerank_topk` composes over
+    :func:`pq_adc_topk_indexed`). ``_bq_``-prefixed internal
     columns."""
-    bz = binary_quantize(corpus, vec_col, code_col="_bq_code")
-    qz = binary_quantize(
-        queries.select(
-            _c(query_id).alias("_bq_qid"), _c(vec_col).alias("_bq_qvec")
-        ),
-        "_bq_qvec",
-        code_col="_bq_qcode",
-    )
-    q = F.broadcast(qz)
-    scored = bz.crossJoin(q).select(
-        F.col("_bq_qid").alias(query_id),
-        _c(corpus_id).alias(corpus_id),
-        _c(vec_col).alias(vec_col),
-        F.col("_bq_qvec"),
-        binary_hamming(F.col("_bq_code"), F.col("_bq_qcode")).alias("_bq_ham"),
-    )
-    w1 = Window.partitionBy(query_id).orderBy(F.asc("_bq_ham"), _c(corpus_id))
-    short = (
-        scored.withColumn("_bq_r1", F.row_number().over(w1))
-        .filter(F.col("_bq_r1") <= shortlist)
-    )
-    rer = short.select(
-        query_id,
-        corpus_id,
-        F.round(
-            cosine_similarity(_c(vec_col), F.col("_bq_qvec")), 6
-        ).alias("cos_sim"),
-    )
-    w2 = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), _c(corpus_id))
-    return (
-        rer.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
+    return binary_topk_indexed(
+        binary_quantize(corpus, vec_col, code_col="_bq_code"), corpus, queries,
+        k=k, shortlist=shortlist, corpus_id=corpus_id, query_id=query_id,
+        vec_col=vec_col, code_col="_bq_code",
     )
 
 
@@ -1350,9 +1269,9 @@ def binary_topk_indexed(
     :func:`binary_quantize`, built once): the Hamming stage scans ONLY
     the 200-byte-per-vector codes — the float corpus is touched just
     for the ``shortlist`` rerank rows per query (a semi-join-shaped
-    second stage). Equals the fused form for the same shortlist
-    (parity-tested in test_index_client). Queries quantize in-plan and
-    broadcast. ``keep`` names corpus columns carried into the result."""
+    second stage). Queries quantize in-plan and broadcast; both stages
+    are per-query window top-k with map-side partial rank. ``keep``
+    names corpus columns carried into the result."""
     qz = binary_quantize(
         queries.select(
             _c(query_id).alias("_bq_qid"), _c(vec_col).alias("_bq_qvec")
@@ -1367,28 +1286,15 @@ def binary_topk_indexed(
         F.col("_bq_qvec"),
         binary_hamming(_c(code_col), F.col("_bq_qcode")).alias("_bq_ham"),
     )
-    w1 = Window.partitionBy(query_id).orderBy(F.asc("_bq_ham"), _c(corpus_id))
-    short = (
-        scored.withColumn("_bq_r1", F.row_number().over(w1))
-        .filter(F.col("_bq_r1") <= shortlist)
-        .select(query_id, corpus_id, "_bq_qvec")
-    )
-    rer = short.join(
+    short = _shortlist(
+        scored, query_id, [F.asc("_bq_ham"), _c(corpus_id)], shortlist
+    ).select(query_id, corpus_id, "_bq_qvec")
+    cand = short.join(
         corpus.select(
             _c(corpus_id).alias(corpus_id), _c(vec_col).alias(vec_col), *keep
         ),
         corpus_id,
-    ).select(
-        query_id,
-        corpus_id,
-        *keep,
-        F.round(
-            cosine_similarity(_c(vec_col), F.col("_bq_qvec")), 6
-        ).alias("cos_sim"),
     )
-    w2 = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), _c(corpus_id))
-    return (
-        rer.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
+    return _exact_topk(
+        cand, F.col(query_id), F.col("_bq_qvec"), k, corpus_id, query_id, vec_col, keep
     )

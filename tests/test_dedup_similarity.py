@@ -633,6 +633,50 @@ def test_kmeans_centroids_recover_planted_clusters(spark):
     assert full == exact
 
 
+def test_kmeans_centroids_deterministic_below_sample_cap(spark):
+    """ROADMAP 5(c): with ``sample_cap`` below half the corpus the fit
+    sees only the md5-first rows, and which rows those are must not
+    depend on the call or on the corpus's partitioning and row order —
+    two calls and a repartition(7)-reordered copy give identical
+    centroids."""
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    cap = emb.count() // 2 - 1
+
+    def fit(df):
+        return sorted(
+            (r["c_id"], tuple(r["embedding"]))
+            for r in SIM.kmeans_centroids(df, 4, iters=2, sample_cap=cap).collect()
+        )
+
+    first = fit(emb)
+    assert len(first) == 4
+    assert fit(emb) == first
+    assert fit(emb.repartition(7)) == first
+
+
+def test_ivfadc_runs_no_scoring_udf(spark):
+    """ivfadc_topk scores the probed (query, list) pairs with
+    pq_adc_topk_indexed's ADC expression and reranks with its
+    literal-query stage: at the defaults the executed plan holds two
+    Python evaluation nodes (ivf_assign's and the PQ encode's) and no
+    driver-side query relation — the one local relation in it is the
+    broadcast probe pairs."""
+    import re
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    corpus = emb.filter(F.col("vec_id") >= 5)
+    df = SIM.ivfadc_topk(corpus, queries, k=3)
+    assert len(df.collect()) == 15
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # the adaptive final plan
+    assert len(re.findall(r"(?:Arrow|Batch)EvalPython", plan)) == 2, plan
+    local = re.findall(r"(?:LocalTableScan|ExistingRDD).*", plan)
+    assert local and all("_bias" in node for node in local), local
+
+
 def test_quantized_rerank_equals_exact(spark):
     """Two-stage quantized top-k contract: int8 candidate scan with a
     50-wide shortlist + exact rerank reproduces exact cosine_topk_batch
@@ -671,6 +715,9 @@ def test_driver_query_collect_guard(spark, monkeypatch):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     queries = emb.limit(8).select(F.col("vec_id").alias("q_id"), "embedding")
     corpus = emb.limit(40)
+    books = SIM.pq_train(corpus, m=4, n_codes=8)
+    codes = SIM.pq_encode(corpus, books).select("vec_id", "pq_code")
+    graph = HN.hnsw_index(corpus, n_shards=2)
 
     monkeypatch.setattr(SIM, "MAX_DRIVER_QUERIES", 5)
     with pytest.raises(ValueError, match="lsh_ann_topk"):
@@ -679,6 +726,11 @@ def test_driver_query_collect_guard(spark, monkeypatch):
         SIM.ivfadc_topk(corpus, queries, k=2, n_lists=2, m=4, n_codes=8)
     with pytest.raises(ValueError, match="lsh_ann_topk"):
         HN.hnsw_topk(corpus, queries, k=2)
+    # the serving collectors IndexClient runs
+    with pytest.raises(ValueError, match="lsh_ann_topk"):
+        SIM.pq_adc_topk_indexed(codes, corpus, queries, books, k=2)
+    with pytest.raises(ValueError, match="lsh_ann_topk"):
+        HN.hnsw_topk_indexed(graph, queries, k=2)
     # under the cap the same calls work
     monkeypatch.setattr(SIM, "MAX_DRIVER_QUERIES", 10_000)
     assert SIM.pq_adc_rerank_topk(corpus, queries, k=2, m=4, n_codes=8).count() > 0

@@ -4,6 +4,8 @@ reference's index API over a parquet table."""
 
 from __future__ import annotations
 
+import pytest
+
 from data_ingestion_tool_bakasura__spark.index_client import IndexClient
 from data_ingestion_tool_bakasura__spark.operators.ingest import IngestConfig, ingest_documents
 from data_ingestion_tool_bakasura__spark.sources.readers import load_table
@@ -301,6 +303,64 @@ def test_ivf_serving_partial_probe_parity(spark, tmp_path):
             ).orderBy(F.desc("cos_sim"), "id").collect()
         ]
         assert served == direct, f"nprobe={nprobe}: serve/UDF probe diverged"
+
+
+@pytest.fixture(scope="module")
+def dial_client(spark, tmp_path_factory):
+    client = IndexClient(
+        spark, str(tmp_path_factory.mktemp("idx_dials") / "index"), embedding_dim=8
+    )
+    client.initialize()
+    client.store(_rows(spark, 0, 30))
+    client.build_ann("ivf", n_lists=4, iters=2)
+    client.build_ann("pq", pq_m=4, n_codes=8, iters=2)
+    client.build_ann("binary")
+    return client
+
+
+@pytest.mark.parametrize(
+    "path, dial, value",
+    [
+        ("ivf", "nprobe", 0),
+        ("ivf", "nprobe", -1),
+        ("pq", "shortlist", 0),
+        ("pq", "shortlist", -1),
+        ("binary", "shortlist", 0),
+        ("binary", "shortlist", -1),
+        ("ivf_topk", "nprobe", 0),
+        ("ivfadc_topk", "nprobe", 0),
+        ("ivfadc_topk", "shortlist", 0),
+    ],
+)
+def test_non_positive_serving_dial_raises(spark, dial_client, path, dial, value):
+    """A dial that selects nothing is a caller error, named as such.
+    Before, ``nprobe=0`` probed no list and pruned every one (0 rows),
+    ``nprobe=-1`` probed every list but the last, a given
+    ``shortlist=0`` fell back to the default and ``shortlist=-1`` kept
+    no candidate."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_tool_bakasura__spark.operators import similarity as SIM
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    queries = emb.filter("vec_id < 3").select(
+        F.col("vec_id").alias("q_id"), "embedding"
+    )
+    corpus = emb.filter("vec_id >= 3")
+    with pytest.raises(ValueError, match=f"{dial} must be >= 1"):
+        if path == "ivf_topk":
+            cents = SIM.kmeans_centroids(corpus, 4, iters=1)
+            SIM.ivf_topk(
+                SIM.ivf_assign(corpus, cents), cents, queries, k=3, nprobe=value
+            ).collect()
+        elif path == "ivfadc_topk":
+            SIM.ivfadc_topk(
+                corpus, queries, k=3, n_lists=4, m=4, n_codes=8, **{dial: value}
+            ).collect()
+        else:
+            dial_client.search_vector(
+                "alpha", k=3, index=path, **{dial: value}
+            ).collect()
 
 
 def test_hybrid_rerank_seam(spark, tmp_path):

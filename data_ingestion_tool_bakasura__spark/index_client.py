@@ -260,15 +260,12 @@ class IndexClient:
         ).dropDuplicates(["text_hash"])
         aligned = reliable_checkpoint(aligned)
         with self._writer_lock(timeout=lock_timeout):
-            fresh = aligned.join(
+            fresh = reliable_checkpoint(aligned.join(
                 self.table().select("text_hash").distinct(), on="text_hash", how="left_anti"
-            ).cache()
-            try:
-                n = fresh.count()
-                if n:
-                    fresh.write.mode("append").parquet(self.path)
-            finally:
-                fresh.unpersist()
+            ))
+            n = fresh.count()
+            if n:
+                fresh.write.mode("append").parquet(self.path)
         return n
 
     # -- query surface (B1-B7) ---------------------------------------------

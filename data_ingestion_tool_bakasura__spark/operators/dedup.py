@@ -181,31 +181,6 @@ def minhash_signatures(
     ).withColumnRenamed("_id", id_col)
 
 
-def lsh_band_keys(sig: Column | str, bands: int, rows_per_band: int) -> Column:
-    """Band the signature: array of 'band_id:mh,mh,...' keys.
-
-    Docs sharing ANY band key are candidates; equality of a band of
-    ``rows_per_band`` minhashes ~ Jaccard^rows_per_band. The signature
-    should be a materialized column (see :func:`with_minhash`) so the
-    per-band slices reference an attribute, not a recomputed tree.
-    """
-    s = _c(sig)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.concat(
-            b.cast("string"),
-            F.lit(":"),
-            F.array_join(
-                F.transform(
-                    F.slice(s, b * rows_per_band + 1, F.lit(rows_per_band)),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            ),
-        ),
-    )
-
-
 def lsh_band_index(
     df: DataFrame,
     text_col: str = "text",
@@ -534,8 +509,14 @@ def remove_repeated_spans(
     ``cleaned`` (the post-surgery text), ``n_spans`` (merged removed
     islands), ``n_tokens_removed``, ``n_tokens_kept``. Docs with NULL
     text clean to ``''``; docs whose every occurrence is canonical come
-    back unchanged. Idempotent: a second pass removes nothing (every
-    surviving gram occurrence is the canonical one — tested).
+    back unchanged.
+
+    The cut runs twice, the second pass over the first pass's output:
+    cutting a duplicated span can re-join a run it split (a doc holding
+    run A split by span B, each with its canonical copy elsewhere —
+    cutting B leaves a second whole copy of A). The second pass cuts
+    that copy, so a second call removes nothing (tested); ``n_spans``
+    and ``n_tokens_removed`` sum over both passes.
 
     Scale: tokenization is a map; grams come from ONE ordered window
     over (doc, pos) (no second explode — the frame IS the gram);
@@ -550,18 +531,11 @@ def remove_repeated_spans(
     """
     if n < 2:
         raise ValueError(f"remove_repeated_spans: n must be >= 2, got {n}")
-    tok = _span_tokens(df, text_col, id_col)
-    grams = _span_grams(tok, n)
     # canonical occurrence per gram: lowest (doc, start) — kept; the
     # rest are the duplicated spans to cut
-    dup = (
-        grams.withColumn(
-            "_rn", F.row_number().over(Window.partitionBy("_gh").orderBy("_id", "_st"))
-        )
-        .filter(F.col("_rn") > 1)
-        .select("_id", "_st", "_en")
-    )
-    return _apply_span_surgery(df, tok, dup, id_col)
+    return _span_surgery(df, n, text_col, id_col, lambda grams: grams.withColumn(
+        "_rn", F.row_number().over(Window.partitionBy("_gh").orderBy("_id", "_st"))
+    ).filter(F.col("_rn") > 1))
 
 
 def _span_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -592,55 +566,69 @@ def _span_grams(tok: DataFrame, n: int) -> DataFrame:
     )
 
 
-def _apply_span_surgery(
-    df: DataFrame, tok: DataFrame, dup: DataFrame, id_col: str
-) -> DataFrame:
-    """Merge the duplicated spans per doc (gaps-and-islands) and cut
-    them out of the token stream; one output row per input doc.
+def _span_surgery(df: DataFrame, n: int, text_col: str, id_col: str, dup_of) -> DataFrame:
+    """Two passes of the span cut; one output row per input doc.
+    ``dup_of(grams)`` keeps the gram rows to cut (``_id``, ``_st``,
+    ``_en`` among their columns). Each pass merges the duplicated spans
+    per doc (gaps-and-islands) and cuts them out of the doc's token
+    array; the next pass's grams come from the kept tokens, renumbered.
 
     Doc-level assembly: one row per doc on each side, islands applied
     to the token array with higher-order fns — no removed-positions
     explode, no anti-join, and the merged-island frame is consumed
     exactly once (a third text scan otherwise reappears via a
     spans-accounting agg)."""
+    tok = _span_tokens(df, text_col, id_col)
+    docs = (
+        df.select(_c(id_col).alias("_id")).distinct()
+        .join(tok.groupBy("_id").agg(
+            F.array_sort(F.collect_list(F.struct("_pos", "_tok"))).alias("_toks")
+        ), "_id", "left")
+        .select(
+            "_id", F.coalesce("_toks", F.array()).alias("_toks"),
+            F.lit(0).cast("long").alias("n_spans"),
+            F.lit(0).cast("long").alias("n_tokens_removed"),
+        )
+    )
     # a span opens a new island iff it starts past every prior span's end
     wprev = Window.partitionBy("_id").orderBy("_st").rowsBetween(Window.unboundedPreceding, -1)
     wrun = Window.partitionBy("_id").orderBy("_st")
-    merged = (
-        dup.withColumn(
-            "_new", (F.col("_st") > F.coalesce(F.max("_en").over(wprev), F.lit(-1))).cast("int")
+    for _ in range(2):
+        merged = (
+            dup_of(_span_grams(tok, n)).select("_id", "_st", "_en")
+            .withColumn(
+                "_new", (F.col("_st") > F.coalesce(F.max("_en").over(wprev), F.lit(-1))).cast("int")
+            )
+            .withColumn("_isl", F.sum("_new").over(wrun))
+            .groupBy("_id", "_isl")
+            .agg(F.min("_st").alias("_st"), F.max("_en").alias("_en"))
         )
-        .withColumn("_isl", F.sum("_new").over(wrun))
-        .groupBy("_id", "_isl")
-        .agg(F.min("_st").alias("_st"), F.max("_en").alias("_en"))
-    )
-    tok_agg = tok.groupBy("_id").agg(
-        F.array_sort(F.collect_list(F.struct("_pos", "_tok"))).alias("_toks")
-    )
-    isl_agg = merged.groupBy("_id").agg(
-        F.collect_list(F.struct("_st", "_en")).alias("_cut"),
-        F.count("*").alias("n_spans"),
-        F.sum(F.col("_en") - F.col("_st") + 1).alias("n_tokens_removed"),
-    )
-    ids = df.select(_c(id_col).alias("_id")).distinct()
-    kept = F.filter(
-        F.coalesce("_toks", F.array()),
-        lambda t: ~F.exists(
-            F.coalesce("_cut", F.array()),
-            lambda s: (t["_pos"] >= s["_st"]) & (t["_pos"] <= s["_en"]),
-        ),
-    )
-    return (
-        ids.join(tok_agg, "_id", "left")
-        .join(isl_agg, "_id", "left")
-        .withColumn("_kept", kept)
-        .select(
-            F.col("_id").alias(id_col),
-            F.array_join(F.transform("_kept", lambda t: t["_tok"]), " ").alias("cleaned"),
-            F.coalesce("n_spans", F.lit(0).cast("long")).alias("n_spans"),
-            F.coalesce("n_tokens_removed", F.lit(0).cast("long")).alias("n_tokens_removed"),
-            F.size("_kept").cast("long").alias("n_tokens_kept"),
+        isl_agg = merged.groupBy("_id").agg(
+            F.collect_list(F.struct("_st", "_en")).alias("_cut"),
+            F.count("*").alias("_ns"),
+            F.sum(F.col("_en") - F.col("_st") + 1).alias("_nr"),
         )
+        kept = F.filter(
+            "_toks",
+            lambda t: ~F.exists(
+                F.coalesce("_cut", F.array()),
+                lambda s: (t["_pos"] >= s["_st"]) & (t["_pos"] <= s["_en"]),
+            ),
+        )
+        docs = docs.join(isl_agg, "_id", "left").select(
+            "_id",
+            F.transform(kept, lambda t, i: F.struct(i.alias("_pos"), t["_tok"].alias("_tok")))
+            .alias("_toks"),
+            (F.col("n_spans") + F.coalesce("_ns", F.lit(0))).alias("n_spans"),
+            (F.col("n_tokens_removed") + F.coalesce("_nr", F.lit(0))).alias("n_tokens_removed"),
+        )
+        tok = docs.select("_id", F.inline("_toks"))
+    return docs.select(
+        F.col("_id").alias(id_col),
+        F.array_join(F.transform("_toks", lambda t: t["_tok"]), " ").alias("cleaned"),
+        "n_spans",
+        "n_tokens_removed",
+        F.size("_toks").cast("long").alias("n_tokens_kept"),
     )
 
 
@@ -676,6 +664,10 @@ def remove_repeated_spans_increment(
     this increment. First-seen-wins; with doc-id-ordered arrival the
     cleaned output equals the batch :func:`remove_repeated_spans` run
     over corpus+increment, restricted to the increment (parity-tested).
+    Both run the cut twice, the second pass against the same index; as
+    the index holds the corpus's PRE-surgery grams, the two can differ
+    only where a second-pass cut in the increment depends on surgery
+    inside the corpus.
 
     Corpus text is never re-tokenized: per increment the work is the
     increment's own gram pass plus one semi/anti-join against the
@@ -684,23 +676,17 @@ def remove_repeated_spans_increment(
     """
     if n < 2:
         raise ValueError(f"remove_repeated_spans_increment: n must be >= 2, got {n}")
-    tok = _span_tokens(new_docs, text_col, id_col)
-    grams = _span_grams(tok, n)
-    seen = index.select(F.col("gh").alias("_gh"), F.lit(True).alias("_seen"))
-    # ONE pass over the increment's grams: left-join the seen flag, then
-    # rank every occurrence per gram. Seen-before grams are cut entirely
-    # (the corpus holds the canonical, so their rank is irrelevant);
-    # fresh grams cut all but the lowest-(doc, pos) occurrence. Fusing
-    # the former semi+anti pair halves the gram-subtree evaluations.
-    dup = (
-        grams.join(seen.distinct(), "_gh", "left")
-        .withColumn(
-            "_rn", F.row_number().over(Window.partitionBy("_gh").orderBy("_id", "_st"))
-        )
-        .filter(F.col("_seen").isNotNull() | (F.col("_rn") > 1))
-        .select("_id", "_st", "_en")
-    )
-    return _apply_span_surgery(new_docs, tok, dup, id_col)
+    seen = index.select(F.col("gh").alias("_gh"), F.lit(True).alias("_seen")).distinct()
+    # ONE ranking per pass over the increment's grams: left-join the
+    # seen flag, then rank every occurrence per gram. Seen-before grams
+    # are cut entirely (the corpus holds the canonical, so their rank is
+    # irrelevant); fresh grams cut all but the lowest-(doc, pos)
+    # occurrence. Both passes probe the same index.
+    return _span_surgery(new_docs, n, text_col, id_col, lambda grams: grams.join(
+        seen, "_gh", "left"
+    ).withColumn(
+        "_rn", F.row_number().over(Window.partitionBy("_gh").orderBy("_id", "_st"))
+    ).filter(F.col("_seen").isNotNull() | (F.col("_rn") > 1)))
 
 
 def semantic_dedup(
@@ -1197,7 +1183,7 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     fixed job latency per round) resolves in 2 levels. Per-level
     mappings (node -> level root) compose by join at the end. Plans
     stay shallow (<= max_levels joins), so no checkpoint/spill lineage
-    discipline is needed; each level's edge set is localCheckpoint'd to
+    discipline is needed; each level's edge set is checkpointed to
     cut the mapInPandas lineage. No driver-side state beyond the
     per-level quotient edge count.
     """

@@ -11,13 +11,13 @@ Scale shape:
 - ``host_graph`` is ONE exchange on the (src, dst) domain pair.
 - ``pagerank`` is the standard synchronous power iteration expressed
   as DataFrame joins: the transition matrix (edge weight / out-weight)
-  is built ONCE and persisted; each sweep is one shuffle join on the
+  is built ONCE and checkpointed; each sweep is one shuffle join on the
   source key plus one aggregation on the destination key, with the
   dangling mass derived by CONSERVATION from the contribution sums (a
   1-row reduce) and crossed in — with the node count — as *broadcast*
   nested-loop joins (bounded: never a CartesianProduct of two
   unbounded sides). The rank lineage is single-use, so only the
-  per-sweep contribution frame persists. At 100 TB the host graph is
+  per-sweep contribution frame is checkpointed. At 100 TB the host graph is
   ~10^8 nodes / 10^9 edges — each sweep shuffles the edge list once
   on ``src``; no driver-side state beyond the query plan.
 
@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_tool_bakasura__spark.functions import urls as U
+from data_ingestion_tool_bakasura__spark.session import reliable_checkpoint
 
 #: WAT link entries: {"url": href, "text": anchor text}. Real
 #: Common-Crawl WAT nests the array at
@@ -147,7 +148,6 @@ def pagerank(
     weight_col: str | None = None,
     iterations: int = 3,
     damping: float = 0.85,
-    persisted: list | None = None,
 ) -> DataFrame:
     """Fixed-iteration weighted PageRank -> (node, rank).
 
@@ -168,55 +168,43 @@ def pagerank(
     1 every sweep. That makes each sweep ONE join + one aggregation
     (plus a 1-row reduce over the already-aggregated contribution
     frame), and the rank lineage single-use, so no per-iteration
-    materialization is needed.
+    materialization of the ranks is needed.
 
-    ``persisted``: an optional caller-owned list that collects every
-    frame this plan persists (the edge list, nodes, the transition
-    matrix, and one contribs frame per sweep). pagerank stays fully
-    lazy (plan construction fires zero jobs), so it cannot unpersist
-    them itself — a LONG-RUNNING caller (the streaming crawl's
-    ``ranks_refresh_every`` re-rank) must materialize the returned
-    ranks, then ``df.unpersist()`` each collected frame, or cached
-    RDDs accumulate unboundedly across refreshes (the r11 ADVICE
-    finding). One-shot callers (a batch query, the bench) may omit it:
-    their persists die with the session."""
+    Construction runs jobs: the edge list, the node set, the transition
+    matrix and each sweep's contribution frame are share points, each
+    materialized once through ``reliable_checkpoint`` (the returned
+    ranks stay lazy over them). Their blocks are released when the
+    returned frame is garbage-collected, so a long-running caller (the
+    streaming crawl's ``ranks_refresh_every`` re-rank) holds no list of
+    frames to unpersist."""
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    # the edge list is the root of EVERY branch below (nodes = 2 scans,
-    # out-weights, transition matrix, and the per-iteration dangling
-    # probe) — persist it first so an expensive upstream (a WAT parse,
-    # a multi-join) materializes exactly once, then persist the two
-    # frames each sweep re-reads (outw: dangling anti-join; trans:
-    # contribution join). All persists are lazy — plan construction
-    # still fires zero jobs.
-    e = edges.select(
+    # the edge list is the root of EVERY branch below (nodes,
+    # out-weights, transition matrix) — materialize it first so an
+    # expensive upstream (a WAT parse, a multi-join) runs exactly once,
+    # then the two frames each sweep re-reads (nodes: the rank join;
+    # trans: the contribution join)
+    e = reliable_checkpoint(edges.select(
         F.col(src).alias("_src"), F.col(dst).alias("_dst"), w.alias("_w")
-    ).persist()
-    nodes = (
-        e.select(F.explode(F.array("_src", "_dst")).alias("node"))
-        .distinct()
-        .persist()
+    ))
+    nodes = reliable_checkpoint(
+        e.select(F.explode(F.array("_src", "_dst")).alias("node")).distinct()
     )  # one scan of e, not a union's two
     outw = e.groupBy("_src").agg(F.sum("_w").alias("_outw"))
-    trans = (
+    trans = reliable_checkpoint(
         e.join(outw, "_src")
         .select("_src", "_dst", (F.col("_w") / F.col("_outw")).alias("_p"))
-        .persist()
     )
-    if persisted is not None:
-        persisted.extend([e, nodes, trans])
     n1 = nodes.agg(F.count("*").cast("double").alias("_n"))  # 1 row
     ranks = nodes.crossJoin(F.broadcast(n1)).select(
         "node", (F.lit(1.0) / F.col("_n")).alias("rank")
     )
     for _ in range(iterations):
-        contribs = (
+        # read twice: the 1-row reduce and the re-join
+        contribs = reliable_checkpoint(
             trans.join(ranks, trans["_src"] == ranks["node"])
             .groupBy("_dst")
             .agg(F.sum(F.col("rank") * F.col("_p")).alias("_c"))
-            .persist()  # read twice: the 1-row reduce and the re-join
         )
-        if persisted is not None:
-            persisted.append(contribs)
         dangling = contribs.agg(
             (F.lit(1.0) - F.coalesce(F.sum("_c"), F.lit(0.0))).alias("_dm")
         )  # 1 row, by conservation (see docstring)
@@ -363,13 +351,10 @@ def host_graph_increment(
             .filter(F.col("wave") == wave_id)
         )
         if seen.limit(1).count() > 0:
-            return 0  # persist deferred past this guard: the replayed
-            # no-op path must not leak a cached-frame registration per
-            # micro-batch (r11 ADVICE finding)
-    new = new.persist()  # counted AND written below: links parse once
+            return 0  # before the checkpoint: a replayed no-op parses nothing
+    new = reliable_checkpoint(new)  # counted AND written: links parse once
     n = new.count()
     new.write.mode("append").parquet(graph_path)
-    new.unpersist()
     return n
 
 

@@ -95,8 +95,7 @@ def stratified_hash_sample(df: DataFrame, id_col: str, strata_col: str,
 
 def token_budget_select(df: DataFrame, score_col: str, token_col: str,
                         budget: int, tiebreak_col: str,
-                        n_buckets: int | None = None,
-                        checkpoint: bool = True) -> DataFrame:
+                        n_buckets: int | None = None) -> DataFrame:
     """Highest-scored rows whose cumulative token count fits ``budget``
     (corpus curation under a training-token budget), deterministic in
     (score desc, tiebreak) order.
@@ -121,7 +120,7 @@ def token_budget_select(df: DataFrame, score_col: str, token_col: str,
     single over-popular score value degrades that one bucket to one
     task (never worse than the naive plan).
 
-    ``checkpoint`` (default on) localCheckpoints ``df`` first so the
+    ``df`` is checkpointed first (``reliable_checkpoint``) so the
     quantile, totals and window passes read materialized scalars
     instead of recomputing the scoring lineage three times (measured
     21s -> ~3s at sf0.1 when the score is regexp-derived). PROJECT
@@ -130,8 +129,7 @@ def token_budget_select(df: DataFrame, score_col: str, token_col: str,
     of bytes per row, which is exactly what you'd persist anyway.
     """
     spark = df.sparkSession
-    if checkpoint:
-        df = df.transform(reliable_checkpoint)
+    df = reliable_checkpoint(df)
     if n_buckets is None:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     score = F.col(score_col)
@@ -631,7 +629,7 @@ def doc_trigram_counts(
     shared first stage of :func:`fit_lang_profiles` and
     :func:`trigram_lang_id`. When one corpus is both fit and classify
     target (e.g. a labeled-corpus confusion matrix), compute this
-    ONCE, ``persist()`` it, and pass it to both via ``doc_counts=`` —
+    ONCE, ``reliable_checkpoint`` it, and pass it to both via ``doc_counts=`` —
     the corpus-wide explode + (doc, tri) aggregation (by far the
     heaviest stage) then runs a single time instead of once per
     consumer (Spark does not share common subplans across DAG
@@ -906,7 +904,7 @@ def fit_quality_weights(
     fitted by IRLS/Newton.
 
     Scale shape (the |strata|-aggregate pattern): features are computed
-    IN-PLAN and localCheckpointed once (65 bytes/row — the labeled set
+    IN-PLAN and checkpointed once (65 bytes/row — the labeled set
     is a sample by contract, but nothing here breaks at any size);
     each Newton iteration is ONE distributed aggregation producing the
     27 scalars of the 6x6 normal equations (X'WX upper triangle +

@@ -602,61 +602,75 @@ def q_substring_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _span_pass_sql(k: int, src: str) -> str:
+    """CTEs of one span-surgery pass over ``src`` (doc_id, tk): the
+    canonical ranking, island merge and token surgery, suffixed ``k``
+    — ``clean{k}`` holds the kept text, ``sp{k}`` the accounting."""
+    return f"""tok{k} AS (
+  SELECT doc_id, i - 1 AS pos, tk[i] AS tok
+  FROM {src}, LATERAL (SELECT unnest(range(1, len(tk) + 1)) AS i)
+  WHERE tk[i] <> ''
+), g{k} AS (
+  SELECT doc_id, i - 1 AS st, i + {_SPAN_N - 2} AS en,
+         array_to_string(tk[i:i+{_SPAN_N - 1}], ' ') AS gh
+  FROM {src}, LATERAL (SELECT unnest(range(1, len(tk) - {_SPAN_N - 2})) AS i)
+  WHERE len(tk) >= {_SPAN_N}
+), dup{k} AS (
+  SELECT doc_id, st, en FROM (
+    SELECT doc_id, st, en,
+           row_number() OVER (PARTITION BY gh ORDER BY doc_id, st) AS rn
+    FROM g{k})
+  WHERE rn > 1
+), isl{k} AS (
+  SELECT doc_id, st, en,
+         CASE WHEN st > coalesce(max(en) OVER (PARTITION BY doc_id ORDER BY st
+              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
+              THEN 1 ELSE 0 END AS ni
+  FROM dup{k}
+), merged{k} AS (
+  SELECT doc_id, island, min(st) AS st, max(en) AS en
+  FROM (SELECT doc_id, st, en,
+               sum(ni) OVER (PARTITION BY doc_id ORDER BY st) AS island
+        FROM isl{k})
+  GROUP BY doc_id, island
+), removed{k} AS (
+  SELECT doc_id, unnest(range(st, en + 1)) AS pos FROM merged{k}
+), kept{k} AS (
+  SELECT t.doc_id, t.pos, t.tok
+  FROM tok{k} t LEFT JOIN removed{k} r ON t.doc_id = r.doc_id AND t.pos = r.pos
+  WHERE r.doc_id IS NULL
+), clean{k} AS (
+  SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS cleaned,
+         count(*) AS n_tokens_kept
+  FROM kept{k} GROUP BY doc_id
+), sp{k} AS (
+  SELECT doc_id, count(*) AS n_spans,
+         sum(en - st + 1) AS n_tokens_removed
+  FROM merged{k} GROUP BY doc_id
+)"""
+
+
+# two passes, the second over the first's cleaned text
+# (remove_repeated_spans); the accounting sums over both
 ORACLE["q_substring_dedup"] = f"""
 WITH d AS (
   SELECT doc_id, source,
          string_split(trim(regexp_replace(coalesce(text, ''), '\\s+', ' ', 'g')), ' ') AS tk
   FROM documents
-), tok AS (
-  SELECT doc_id, i - 1 AS pos, tk[i] AS tok
-  FROM d, LATERAL (SELECT unnest(range(1, len(tk) + 1)) AS i)
-  WHERE tk[i] <> ''
-), g AS (
-  SELECT doc_id, i - 1 AS st, i + {_SPAN_N - 2} AS en,
-         array_to_string(tk[i:i+{_SPAN_N - 1}], ' ') AS gh
-  FROM d, LATERAL (SELECT unnest(range(1, len(tk) - {_SPAN_N - 2})) AS i)
-  WHERE len(tk) >= {_SPAN_N}
-), dup AS (
-  SELECT doc_id, st, en FROM (
-    SELECT doc_id, st, en,
-           row_number() OVER (PARTITION BY gh ORDER BY doc_id, st) AS rn
-    FROM g)
-  WHERE rn > 1
-), isl AS (
-  SELECT doc_id, st, en,
-         CASE WHEN st > coalesce(max(en) OVER (PARTITION BY doc_id ORDER BY st
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -1)
-              THEN 1 ELSE 0 END AS ni
-  FROM dup
-), merged AS (
-  SELECT doc_id, island, min(st) AS st, max(en) AS en
-  FROM (SELECT doc_id, st, en,
-               sum(ni) OVER (PARTITION BY doc_id ORDER BY st) AS island
-        FROM isl)
-  GROUP BY doc_id, island
-), removed AS (
-  SELECT doc_id, unnest(range(st, en + 1)) AS pos FROM merged
-), kept AS (
-  SELECT t.doc_id, t.pos, t.tok
-  FROM tok t LEFT JOIN removed r ON t.doc_id = r.doc_id AND t.pos = r.pos
-  WHERE r.doc_id IS NULL
-), clean AS (
-  SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS cleaned,
-         count(*) AS n_tokens_kept
-  FROM kept GROUP BY doc_id
-), sp AS (
-  SELECT doc_id, count(*) AS n_spans,
-         sum(en - st + 1) AS n_tokens_removed
-  FROM merged GROUP BY doc_id
-)
+), {_span_pass_sql(1, "d")}, d2 AS (
+  SELECT d.doc_id, string_split(coalesce(c.cleaned, ''), ' ') AS tk
+  FROM d LEFT JOIN clean1 c ON d.doc_id = c.doc_id
+), {_span_pass_sql(2, "d2")}
 SELECT d.doc_id, d.source,
-       CAST(coalesce(sp.n_spans, 0) AS BIGINT) AS n_spans,
-       CAST(coalesce(sp.n_tokens_removed, 0) AS BIGINT) AS n_tokens_removed,
-       CAST(coalesce(clean.n_tokens_kept, 0) AS BIGINT) AS n_tokens_kept,
-       md5(coalesce(clean.cleaned, '')) AS clean_hash
+       CAST(coalesce(s1.n_spans, 0) + coalesce(s2.n_spans, 0) AS BIGINT) AS n_spans,
+       CAST(coalesce(s1.n_tokens_removed, 0) + coalesce(s2.n_tokens_removed, 0)
+            AS BIGINT) AS n_tokens_removed,
+       CAST(coalesce(c.n_tokens_kept, 0) AS BIGINT) AS n_tokens_kept,
+       md5(coalesce(c.cleaned, '')) AS clean_hash
 FROM d
-LEFT JOIN clean ON d.doc_id = clean.doc_id
-LEFT JOIN sp ON d.doc_id = sp.doc_id
+LEFT JOIN clean2 c ON d.doc_id = c.doc_id
+LEFT JOIN sp1 s1 ON d.doc_id = s1.doc_id
+LEFT JOIN sp2 s2 ON d.doc_id = s2.doc_id
 ORDER BY d.doc_id
 """
 

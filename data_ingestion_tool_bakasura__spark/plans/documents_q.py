@@ -1357,7 +1357,7 @@ def q_repetition_filter(spark: SparkSession, sf: str) -> DataFrame:
     lead columns, no array materialization. The tokenized frame feeds
     two aggregations (word counts, trigram counts); Spark re-derives the
     cheap split lineage for each branch — at corpus scale you'd
-    localCheckpoint the token frame exactly like token_budget_select
+    checkpoint the token frame exactly like token_budget_select
     checkpoints its scored projection. Thresholds (0.12 / 0.01) sit at
     ~p80 of the fixture distribution so both keep and drop are
     exercised."""

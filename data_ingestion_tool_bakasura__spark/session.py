@@ -95,22 +95,32 @@ def validate_config(spark: SparkSession) -> None:
         raise ConfigError("engine session misconfigured: " + "; ".join(missing))
 
 
-def reliable_checkpoint(df, eager: bool = True):
-    """Materialize ``df`` and truncate its lineage, surviving executor
-    loss when the deployment provides reliable storage.
+def reliable_checkpoint(df):
+    """Materialize ``df`` now and truncate its lineage, surviving
+    executor loss when the deployment provides reliable storage.
 
-    Every lineage-truncation point in the engine (iterative union-find
-    contraction, incremental-index anti-joins, foreachBatch write plans)
-    routes through here. Local checkpoints keep the materialized blocks
-    on executor block managers only — fine on ``local[32]``, but on a
-    real cluster one lost executor aborts the whole job and restarts it
-    from zero. When a checkpoint directory is configured (call
-    ``sc.setCheckpointDir(...)``, or set ``spark.checkpoint.dir`` and
-    this helper applies it to the context on first use) the reliable
-    ``df.checkpoint()`` path is used instead: blocks land on shared
-    storage (HDFS/S3) and survive executor loss. With no directory
-    configured it falls back to ``localCheckpoint`` — identical plan
-    shape, weaker fault-tolerance, zero extra infra.
+    This is the engine's one materialization primitive: every share
+    point and lineage-truncation point (iterative union-find
+    contraction, PageRank's transition matrix and sweeps,
+    incremental-index anti-joins, foreachBatch write plans, the
+    ``IndexClient.store`` probe) routes through here, and nothing else
+    persists, caches or checkpoints a frame (a tier-1 AST scan enforces
+    it). Checkpoints are eager: under AQE a lazy checkpoint of a plan
+    with a shuffle runs its map stage at construction anyway. A released
+    frame's blocks (and, with ``cleanCheckpoints``, its reliable files)
+    are cleaned once it is garbage-collected, so no caller owns an
+    unpersist.
+
+    Local checkpoints keep the materialized blocks on executor block
+    managers only — fine on ``local[32]``, but on a real cluster one
+    lost executor aborts the whole job and restarts it from zero. When
+    a checkpoint directory is configured (call ``sc.setCheckpointDir(...)``,
+    or set ``spark.checkpoint.dir`` and this helper applies it to the
+    context on first use) the reliable ``df.checkpoint()`` path is used
+    instead: blocks land on shared storage (HDFS/S3) and survive
+    executor loss. With no directory configured it falls back to
+    ``localCheckpoint`` — identical plan shape, weaker fault-tolerance,
+    zero extra infra.
     """
     sc = df.sparkSession.sparkContext
     ckdir = sc.getCheckpointDir()
@@ -120,5 +130,5 @@ def reliable_checkpoint(df, eager: bool = True):
             sc.setCheckpointDir(conf_dir)
             ckdir = conf_dir
     if ckdir:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint()
+    return df.localCheckpoint()

@@ -1205,28 +1205,17 @@ def start_streaming_crawl(
                     swap_directory,
                 )
 
-                # pagerank persists its edge/nodes/transition/contribs
-                # frames; this loop re-ranks every N batches for the
-                # stream's lifetime, so release them once the write
-                # (the materializing action) lands — otherwise cached
-                # frames accumulate unboundedly (r11 ADVICE finding)
-                rank_persists: list = []
                 ranks = LG.pagerank(
                     LG.load_host_graph(spark, link_graph_path),
                     weight_col="n_links",
-                    persisted=rank_persists,
                 )
-                try:
-                    dst = host_ranks_path.removeprefix("file://")
-                    if os.path.exists(dst):
-                        tmp = dst.rstrip("/") + "_ranks_tmp"
-                        ranks.write.mode("overwrite").parquet(tmp)
-                        swap_directory(spark, dst, tmp)
-                    else:
-                        ranks.write.parquet(dst)
-                finally:
-                    for frame in rank_persists:
-                        frame.unpersist()
+                dst = host_ranks_path.removeprefix("file://")
+                if os.path.exists(dst):
+                    tmp = dst.rstrip("/") + "_ranks_tmp"
+                    ranks.write.mode("overwrite").parquet(tmp)
+                    swap_directory(spark, dst, tmp)
+                else:
+                    ranks.write.parquet(dst)
                 _crash_point("ranks_swapped")
         if seen_bloom:
             # bloom BEFORE corpus (superset invariant): a crash between

@@ -828,9 +828,13 @@ def test_initialize_heal_scoped_to_spark_staging_artifacts(spark, tmp_path):
 
 
 def test_store_failed_append_releases_cache(spark, tmp_path, monkeypatch):
-    """store() caches its anti-join result for the count and the
-    append; when the append raises, the cached frame must still be
-    released, not left in the session's cache manager."""
+    """store() checkpoints its anti-join result for the count and the
+    append; when the append raises, nothing is left in the session's
+    cache manager, and once collected the checkpoint's blocks are
+    released too."""
+    import gc
+    import time
+
     import pytest
     from pyspark.sql.readwriter import DataFrameWriter
 
@@ -838,6 +842,16 @@ def test_store_failed_append_releases_cache(spark, tmp_path, monkeypatch):
     client.initialize()
     rows = _rows(spark, 0, 5)
     spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+
+    def cached():
+        # RDDInfo rows, not the getPersistentRDDs() map: the map pins
+        # every RDD in it for as long as the gateway holds it
+        return {i.id() for i in jsc.sc().getRDDStorageInfo()}
+
+    gc.collect()
+    before = set(jsc.getPersistentRDDs().keys())
+    cached_before = cached()
 
     def boom(self, *a, **kw):
         raise OSError("disk full")
@@ -846,6 +860,14 @@ def test_store_failed_append_releases_cache(spark, tmp_path, monkeypatch):
     with pytest.raises(OSError, match="disk full"):
         client.store(rows)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert cached() - cached_before, "store materialized nothing"
+    deadline = time.monotonic() + 60
+    while cached() - cached_before and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+    assert not set(jsc.getPersistentRDDs().keys()) - before, (
+        "the failed store's checkpoints are still held")
 
 
 def test_ann_manifest_without_schemas_points_to_rebuild(spark, tmp_path):

@@ -273,6 +273,40 @@ def test_top_hosts(spark):
     assert [r["node"] for r in top] == want
 
 
+def test_pagerank_refreshes_release_their_checkpoints(spark, tmp_path):
+    """pagerank's share points are GC-scoped checkpoints, so a
+    long-running re-rank (the streaming crawl's ``ranks_refresh_every``)
+    owns nothing to unpersist: once two written refreshes are dropped
+    and collected, the context's persistent RDDs are back to their
+    baseline."""
+    import gc
+    import time
+
+    jsc = spark.sparkContext._jsc
+
+    def cached():
+        # RDDInfo rows, not the getPersistentRDDs() map: the map pins
+        # every RDD in it for as long as the gateway holds it
+        return {i.id() for i in jsc.sc().getRDDStorageInfo()}
+
+    gc.collect()
+    before = set(jsc.getPersistentRDDs().keys())
+    cached_before = cached()
+    df = spark.createDataFrame(EDGES, ["src", "dst", "w"])
+    for i in range(2):
+        ranks = L.pagerank(df, weight_col="w")
+        ranks.write.parquet(str(tmp_path / f"ranks{i}"))
+    assert cached() - cached_before, "pagerank materialized no share point"
+    del ranks
+    deadline = time.monotonic() + 60
+    while cached() - cached_before and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+    assert not set(jsc.getPersistentRDDs().keys()) - before, (
+        "released pagerank checkpoints are still held")
+
+
 # --- host_rank_filter (frontier-prioritization gate) ------------------------
 
 

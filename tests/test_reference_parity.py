@@ -25,6 +25,14 @@ def _random_corpus(seed=7, n_docs=40, alphabet=4, max_len=40):
 
 
 def _ref_surgery(rows, n):
+    """The operator's two passes: the one-pass cut, then the same cut
+    over the first pass's kept text; the accounting sums over both."""
+    one = _ref_pass(rows, n)
+    two = _ref_pass([(d, v[0]) for d, v in one.items()], n)
+    return {d: (two[d][0], one[d][1] + two[d][1], one[d][2] + two[d][2], two[d][3]) for d in one}
+
+
+def _ref_pass(rows, n):
     toks = {d: t.split() if t else [] for d, t in rows}
     first: dict[tuple, tuple] = {}
     for d in sorted(toks):

@@ -49,7 +49,6 @@ class _FakeDF:
 def test_dispatch_local_when_no_dir():
     df = _FakeDF(_FakeSession())
     assert reliable_checkpoint(df) == ("local", True)
-    assert reliable_checkpoint(df, eager=False) == ("local", False)
 
 
 def test_dispatch_reliable_when_context_dir_set():
@@ -133,3 +132,35 @@ def test_released_reliable_checkpoint_is_deleted(spark, tmp_path):
         getattr(sc._jsc.sc(), "checkpointDir_$eq")(
             spark._jvm.scala.Option.apply(None)
         )
+
+
+def test_reliable_checkpoint_is_the_only_materialization():
+    """Every share point goes through ``reliable_checkpoint``: no
+    ``.persist(``, ``.cache()``, ``.localCheckpoint(`` or
+    ``.checkpoint(`` call appears in the package or the two CLIs
+    outside ``session.py``. A caller-side persist needs a caller-owned
+    unpersist; a checkpoint is released with its frame."""
+    import ast
+    import glob
+
+    import data_ingestion_tool_bakasura__spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    tools = os.path.join(os.path.dirname(root), "tools")
+    files = glob.glob(os.path.join(root, "**", "*.py"), recursive=True) + [
+        os.path.join(tools, "curate_cli.py"),
+        os.path.join(tools, "pipeline_cli.py"),
+    ]
+    banned = {"persist", "cache", "localCheckpoint", "checkpoint"}
+    found = []
+    for path in files:
+        if path == os.path.join(root, "session.py"):
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in banned):
+                found.append(f"{os.path.relpath(path, os.path.dirname(root))}:{node.lineno}")
+    assert len(files) > 50
+    assert not found, found

@@ -67,16 +67,31 @@ def test_remove_repeated_spans_overlap_merges_to_one_island(spark):
     assert out[1]["cleaned"] == f"a {run} b"
 
 
+def _nested_span_corpus(spark):
+    """Doc 3 holds run A split by span B; A's and B's canonical copies
+    sit in docs 1 and 2. Cutting B re-joins a whole second copy of A."""
+    run_a = "a1 a2 a3 a4 a5 a6"
+    span_b = "b1 b2 b3 b4 b5"
+    rows = [
+        (1, f"p {run_a} q"),
+        (2, f"r {span_b} s"),
+        (3, f"t a1 a2 a3 {span_b} a4 a5 a6 u"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
 def test_remove_repeated_spans_idempotent(spark):
     """A second pass over the cleaned corpus removes nothing: every
-    surviving gram occurrence is canonical."""
-    first = DD.remove_repeated_spans(_span_corpus(spark), n=5).select(
-        "doc_id", F.col("cleaned").alias("text")
-    )
-    second = _result_map(DD.remove_repeated_spans(first, text_col="text", n=5))
-    assert all(v["n_tokens_removed"] == 0 for v in second.values())
-    firsts = {r["doc_id"]: r["text"] for r in first.collect()}
-    assert all(second[d]["cleaned"] == firsts[d] for d in firsts)
+    surviving gram occurrence is canonical — also where cutting one
+    span re-joins a duplicated run it split."""
+    for corpus in (_span_corpus(spark), _nested_span_corpus(spark)):
+        first = DD.remove_repeated_spans(corpus, n=5).select(
+            "doc_id", F.col("cleaned").alias("text")
+        )
+        second = _result_map(DD.remove_repeated_spans(first, text_col="text", n=5))
+        assert all(v["n_tokens_removed"] == 0 for v in second.values())
+        firsts = {r["doc_id"]: r["text"] for r in first.collect()}
+        assert all(second[d]["cleaned"] == firsts[d] for d in firsts)
 
 
 def test_remove_repeated_spans_short_docs_pass_through(spark):

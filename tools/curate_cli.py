@@ -162,7 +162,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import functions as F
 
-    from data_ingestion_tool_bakasura__spark.session import get_spark
+    from data_ingestion_tool_bakasura__spark.session import get_spark, reliable_checkpoint
 
     spark = get_spark("curate-cli")
     spark.sparkContext.setLogLevel("ERROR")
@@ -344,7 +344,7 @@ def main(argv: list[str] | None = None) -> int:
         with open(args.quality_weights) as f:
             qw = json.load(f)
 
-    cleaned = remove_repeated_spans(docs, n=args.span_n).localCheckpoint(eager=True)
+    cleaned = reliable_checkpoint(remove_repeated_spans(docs, n=args.span_n))
     scored = char_trigram_nll(cleaned, text_col="cleaned", id_col="doc_id")
     quality = quality_classifier_score(
         cleaned, text_col="cleaned", id_col="doc_id",
@@ -369,7 +369,7 @@ def main(argv: list[str] | None = None) -> int:
         target = spark.read.parquet(args.dsir_target)
         sel = dsir_select(kept, target, k=args.dsir_k, text_col="text")
         kept = kept.join(sel.select("doc_id"), "doc_id")
-    out = hash_split(kept, "doc_id", weights).localCheckpoint(eager=True)
+    out = reliable_checkpoint(hash_split(kept, "doc_id", weights))
 
     corpus_path = os.path.join(args.out_dir, "corpus")
     out.write.partitionBy("split").mode("overwrite").parquet(corpus_path)

@@ -139,6 +139,15 @@ _note_build_jobs_ok(
     "and hashed exactly once, the image_near_dup contract",
 )
 _note_build_jobs_ok(
+    ["q_pagerank"],
+    "pagerank share points: the edge list, node set, transition matrix "
+    "and each sweep's contribution frame materialize as GC-scoped "
+    "checkpoints at construction (reliable_checkpoint is eager; under "
+    "AQE a lazy checkpoint of a plan with a shuffle runs its map stage "
+    "at construction anyway) — the former lazy persists needed a "
+    "caller-owned unpersist list",
+)
+_note_build_jobs_ok(
     ["q_warc_zst_roundtrip"],
     ".warc.zst fixture: write_warc(compression='zstd') materializes the "
     "archives the read leg under test then scans (once per process)",
